@@ -3,8 +3,9 @@
 These run inside ``mapInPandas``/``applyInPandas`` on executors. All regex
 features are evaluated with pandas ``str.contains`` over the whole batch —
 the same Python ``re`` engine as the oracle (``featurespec``), so parity is
-by construction, while the loop is C-level. Only token-membership features
-(word_*, has_langname) walk rows in Python, over precomputed token lists.
+by construction, while the loop is C-level. Token-set features (word_*,
+has_langname, the OOV rates) go through one ``TokenIndex`` per batch: a
+set lookup per *distinct* token, then numpy gathers and bincounts.
 
 The scoring kernel materializes the per-document boolean base-feature
 matrix and applies the context-decomposed weights (``refmodel``) as numpy
@@ -14,6 +15,8 @@ matmuls — no per-line Python in the hot path.
 from __future__ import annotations
 
 import re
+from functools import lru_cache
+from itertools import chain
 from typing import Iterable, Optional
 
 import numpy as np
@@ -112,9 +115,138 @@ def tokenize_series(texts: pd.Series) -> pd.Series:
     return pd.Series(out, index=texts.index, dtype=object)
 
 
+class TokenIndex:
+    """A batch's tokens flattened once and factorized.
+
+    ``rows[k]`` is the line of the k-th token and ``codes[k]`` its slot in
+    ``uniques``; ``lens`` counts tokens per line. A token-set feature is
+    then one set lookup per distinct token plus a gather — web text
+    repeats a small vocabulary, so a batch of 100k tokens typically has
+    a few hundred distinct ones."""
+
+    def __init__(self, tokens: pd.Series):
+        self.tokens = tokens
+        tk = tokens.tolist()
+        self.n = len(tk)
+        self.lens = np.fromiter(map(len, tk), dtype=np.int64, count=self.n)
+        self.rows = np.repeat(np.arange(self.n), self.lens)
+        codes, self.uniques = pd.factorize(
+            np.array(list(chain.from_iterable(tk)), dtype=object)
+        )
+        self.codes = codes.astype(np.intp, copy=False)
+
+    def member(self, words) -> np.ndarray:
+        """Per token: is it in ``words``."""
+        u = self.uniques
+        hit = np.fromiter((w in words for w in u), dtype=bool, count=len(u))
+        return hit[self.codes]
+
+    def any_per_line(self, tok_mask: np.ndarray) -> np.ndarray:
+        out = np.zeros(self.n, dtype=bool)
+        out[self.rows[tok_mask]] = True
+        return out
+
+    def rate_per_line(self, tok_mask: np.ndarray) -> np.ndarray:
+        """Share of each line's tokens in ``tok_mask`` (0.0 for token-less
+        lines): integer count / integer length, one IEEE division — the
+        same float as the oracle's ``sum(...) / len(words)``."""
+        cnt = np.bincount(self.rows[tok_mask], minlength=self.n)
+        return np.divide(
+            cnt, self.lens, out=np.zeros(self.n), where=self.lens > 0
+        )
+
+
+_PLAIN_GRAM = re.compile(r"[0-9A-Za-z]+")
+
+# Non-ASCII codepoints that ``re.I`` matches against an ASCII letter but
+# ``str.lower()`` does not turn into it: U+0130 (whose lower() is 'i' plus
+# a combining dot), and U+0131 and U+017F, which the re module treats as
+# case-equivalents of 'i' and 's'. (U+212A KELVIN SIGN lower()s to 'k'.)
+_GRAM_FOLD = (("İ", "i"), ("ı", "i"), ("ſ", "s"))
+
+
+def gram_fold(text: str) -> str:
+    """``text`` as ``re.I`` sees it against ASCII letters and digits.
+
+    A ``re.I`` match of an ASCII alphanumeric literal is exactly a
+    case-sensitive match of its lower-cased form in ``gram_fold(text)``:
+    every codepoint maps to one codepoint (U+0130 is the only one whose
+    ``lower()`` expands, and it is folded first), and a codepoint comes
+    out as an ASCII letter or digit iff ``re.I`` matches it to that
+    letter or digit. Pinned over every codepoint in the tests."""
+    for a, b in _GRAM_FOLD:
+        text = text.replace(a, b)
+    return text.lower()
+
+
+@lru_cache(maxsize=16)
+def _folded_gram_re(grams: tuple[str, ...]):
+    """Case-sensitive alternation of the lower-cased grams, to search in
+    ``gram_fold``-ed text, when every gram is plain ASCII alphanumeric;
+    else None (the gram list is then a regex, not a list of literals)."""
+    if not grams or not all(_PLAIN_GRAM.fullmatch(g) for g in grams):
+        return None
+    return re.compile("|".join(g.lower() for g in grams))
+
+
+def _search_lines(pat, texts: list[str]) -> np.ndarray:
+    f = pat.search
+    return np.fromiter(
+        (m is not None for m in map(f, texts)), dtype=bool, count=len(texts)
+    )
+
+
+def _folded_lines_matching(pat, texts: list[str]) -> np.ndarray:
+    """Which of ``texts`` contain a match of ``pat`` once ``gram_fold``-ed,
+    from one ``finditer`` over the folded lines joined by newlines. Exact
+    when no match of ``pat`` can contain a newline: every match then lies
+    inside one line, and a line with a match always yields one."""
+    n = len(texts)
+    out = np.zeros(n, dtype=bool)
+    if n == 0:
+        return out
+    ends = np.cumsum(np.fromiter(map(len, texts), dtype=np.int64, count=n) + 1)
+    hits = np.fromiter(
+        (m.start() for m in pat.finditer(gram_fold("\n".join(texts)))),
+        dtype=np.int64,
+    )
+    out[np.searchsorted(ends, hits, side="right")] = True
+    return out
+
+
+def gram_feature(texts: list[str], lex: Lexicons) -> np.ndarray:
+    """has_grams per line: ``lex.gram_re`` (``re.I``) or
+    ``lex.gram_cased_re`` finds a match in the line.
+
+    A plain ASCII alphanumeric ``gram_list`` skips the per-line ``re.I``
+    search: its lower-cased alternation runs without ``re.I`` over the
+    folded batch (``gram_fold``), once over the ASCII lines and once over
+    the rest, so that most of the batch is scanned as a one-byte-per-char
+    string. Any other gram list keeps the per-line search."""
+    n = len(texts)
+    v = np.zeros(n, dtype=bool)
+    if lex.gram_re is not None:
+        fast = _folded_gram_re(tuple(lex.gram_list))
+        if fast is None:
+            v |= _search_lines(lex.gram_re, texts)
+        else:
+            ascii_mask = np.fromiter(
+                (t.isascii() for t in texts), dtype=bool, count=n
+            )
+            v[ascii_mask] = _folded_lines_matching(
+                fast, [t for t, a in zip(texts, ascii_mask) if a]
+            )
+            v[~ascii_mask] = _folded_lines_matching(
+                fast, [t for t, a in zip(texts, ascii_mask) if not a]
+            )
+    if lex.gram_cased_re is not None:
+        v |= _search_lines(lex.gram_cased_re, texts)
+    return v
+
+
 def static_feature_columns(
     pdf: pd.DataFrame,
-    tokens: pd.Series,
+    toks: TokenIndex,
     lex: Lexicons,
     cfg: PipelineConfig,
 ) -> dict[str, np.ndarray]:
@@ -136,10 +268,7 @@ def static_feature_columns(
     fe = cfg.enabled_freki_feats
 
     def contains(pat) -> np.ndarray:
-        f = (pat if hasattr(pat, "search") else re.compile(pat)).search
-        return np.fromiter(
-            (m is not None for m in map(f, texts_list)), dtype=bool, count=n
-        )
+        return _search_lines(pat, texts_list)
 
     # Every unicode-script class matches only non-ASCII codepoints, and most
     # web-text lines are pure ASCII — evaluate the 9 script regexes on the
@@ -158,29 +287,14 @@ def static_feature_columns(
             _non_ascii_texts = [t for t in texts_list if not t.isascii()]
         res = np.zeros(n, dtype=bool)
         if _non_ascii_texts:
-            f = (pat if hasattr(pat, "search") else re.compile(pat)).search
-            res[_non_ascii_mask] = np.fromiter(
-                (m is not None for m in map(f, _non_ascii_texts)),
-                dtype=bool, count=len(_non_ascii_texts),
-            )
+            res[_non_ascii_mask] = _search_lines(pat, _non_ascii_texts)
         return res
 
     if cfg.text_feats_enabled:
         if T_HAS_LANGNAME in te:
-            ln = lex.langnames
-            # set.isdisjoint short-circuits in C — same truth value as
-            # any(w in ln for w in tk) without the per-token bytecode
-            disj = ln.isdisjoint
-            out[T_HAS_LANGNAME] = np.fromiter(
-                (not disj(tk) for tk in tokens), dtype=bool, count=n,
-            )
+            out[T_HAS_LANGNAME] = toks.any_per_line(toks.member(lex.langnames))
         if T_HAS_GRAMS in te:
-            v = np.zeros(n, dtype=bool)
-            if lex.gram_re is not None:
-                v |= contains(lex.gram_re)
-            if lex.gram_cased_re is not None:
-                v |= contains(lex.gram_cased_re)
-            out[T_HAS_GRAMS] = v
+            out[T_HAS_GRAMS] = gram_feature(texts_list, lex)
         if T_HAS_PARENTHETICAL in te:
             out[T_HAS_PARENTHETICAL] = contains(_RE_PARENTHETICAL)
         if T_HAS_CITATION in te:
@@ -203,16 +317,11 @@ def static_feature_columns(
             out[T_HAS_LEADING_WHITESPACE] = contains(_RE_LEADING_WS)
 
         if cfg.real_oov_features:
-            rates = {}
-            for key, ws in (("en", lex.en_words), ("gls", lex.gls_words),
-                            ("met", lex.met_words)):
-                rates[key] = np.fromiter(
-                    (
-                        (sum(1 for w in tk if w not in ws) / len(tk)) if tk else 0.0
-                        for tk in tokens
-                    ),
-                    dtype=np.float64, count=n,
-                )
+            rates = {
+                key: toks.rate_per_line(~toks.member(ws))
+                for key, ws in (("en", lex.en_words), ("gls", lex.gls_words),
+                                ("met", lex.met_words))
+            }
             if T_HIGH_OOV_RATE in te:
                 out[T_HIGH_OOV_RATE] = rates["en"] >= cfg.high_oov
             if T_MED_OOV_RATE in te:
@@ -373,44 +482,25 @@ def base_feature_matrix(
     """
     n = len(pdf)
     X = np.zeros((n, model.n_base), dtype=np.float64)
-    tokens = tokenize_series(pdf["text"].fillna(""))
-    cols = static_feature_columns(pdf, tokens, lex, cfg)
+    toks = TokenIndex(tokenize_series(pdf["text"].fillna("")))
+    cols = static_feature_columns(pdf, toks, lex, cfg)
     if cfg.word_overlap and cfg.text_feats_enabled:
-        cols.update(overlap_feature_columns(pdf, tokens, cfg))
+        cols.update(overlap_feature_columns(pdf, toks.tokens, cfg))
     idx = model.base_index
     for name, arr in cols.items():
         j = idx.get(name)
         if j is not None:
             X[:, j] = arr
     if cfg.text_feats_enabled and T_BASIC in cfg.enabled_text_feats:
-        # Vectorized word-feature scatter: flatten all tokens once
-        # (C-level chain), map token → column through a prebuilt
-        # token-keyed dict (cached on the model — avoids 600k "word_"+w
-        # string concats per mega-doc), and set the hits with ONE fancy-
-        # index assignment instead of per-token X[i, j] = 1.0 scalar
-        # stores. Same cells set (duplicates are idempotent).
-        widx = getattr(model, "_word_col_cache", None)
-        if widx is None:
-            widx = {k[5:]: j for k, j in idx.items() if k.startswith("word_")}
-            try:
-                model._word_col_cache = widx
-            except Exception:
-                pass
-        if widx:
-            from itertools import chain
-
-            tk_arr = tokens.to_numpy(dtype=object)
-            lens = np.fromiter(
-                (len(t) for t in tk_arr), dtype=np.int64, count=n
-            )
-            flat = list(chain.from_iterable(tk_arr))
-            if flat:
-                rows = np.repeat(np.arange(n), lens)
-                cols_s = pd.Series(flat, dtype=object).map(widx)
-                valid = cols_s.notna().to_numpy()
-                if valid.any():
-                    X[rows[valid],
-                      cols_s.to_numpy()[valid].astype(np.int64)] = 1.0
+        # word_* scatter: one column lookup per distinct token, then one
+        # fancy-index store (duplicate cells are idempotent).
+        widx = model.word_columns
+        u = toks.uniques
+        col = np.fromiter(
+            (widx.get(w, -1) for w in u), dtype=np.int64, count=len(u)
+        )[toks.codes]
+        hit = col >= 0
+        X[toks.rows[hit], col[hit]] = 1.0
     return X
 
 
@@ -422,13 +512,13 @@ def fired_name_lists(
     """Sorted fired base-feature names per line (checkpoint/parity path —
     svmlight invariant: only-true, sorted)."""
     n = len(pdf)
-    tokens = tokenize_series(pdf["text"].fillna(""))
-    cols = static_feature_columns(pdf, tokens, lex, cfg)
+    toks = TokenIndex(tokenize_series(pdf["text"].fillna("")))
+    cols = static_feature_columns(pdf, toks, lex, cfg)
     if cfg.word_overlap and cfg.text_feats_enabled:
-        cols.update(overlap_feature_columns(pdf, tokens, cfg))
+        cols.update(overlap_feature_columns(pdf, toks.tokens, cfg))
     names = list(cols.keys())
     mat = np.column_stack([cols[c] for c in names]) if names else np.zeros((n, 0), bool)
-    tk_arr = tokens.to_numpy(dtype=object)
+    tk_arr = toks.tokens.to_numpy(dtype=object)
     use_words = cfg.text_feats_enabled and T_BASIC in cfg.enabled_text_feats
     out: list[list[str]] = []
     for i in range(n):
@@ -454,10 +544,7 @@ def score_matrix(
     Batch path unless the model carries prev_tag features and cfg.prev_tag
     is on (then the strict left-to-right greedy decode runs — reference
     cw.test with prev_label_func, igtdetect.py:1140-1146)."""
-    has_prev_tag = model.has_prev_tag if hasattr(model, "has_prev_tag") else any(
-        k.startswith("prev_tag_") for k in model.base_index
-    )
-    if not (cfg.prev_tag and has_prev_tag):
+    if not (cfg.prev_tag and model.has_prev_tag):
         d = model.decision_doc(X)
         labels = [model.classes[i] for i in d.argmax(axis=1)]
         return labels, (model.probabilities(d) if want_probs else None)

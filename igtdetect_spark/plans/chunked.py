@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     DoubleType,
     IntegerType,
     StringType,
@@ -183,9 +184,7 @@ def chunking_refusal(ctx: DetectContext) -> str | None:
     Shared by detect_spans_chunked (raises) and detect_spans_auto
     (falls back to the fused whole-document path)."""
     probe = ModelWeights.from_broadcastable(ctx.model_bc.value)
-    if ctx.cfg.prev_tag and any(
-        k.startswith("prev_tag_") for k in probe.base_index
-    ):
+    if ctx.cfg.prev_tag and probe.has_prev_tag:
         return (
             "detect_spans_chunked cannot chunk a sequential (prev_tag) "
             "model — use the whole-document paths"
@@ -476,10 +475,14 @@ def choose_detect_path(
 
 
 def corpus_char_stats(pages: DataFrame) -> tuple[int, int]:
-    """(max_chars, total_chars) of page content — ONE narrow aggregate.
-    At warehouse scale these are table statistics (ANALYZE TABLE /
-    Iceberg column metrics); compute once and pass to detect_spans_auto
-    rather than re-scanning per invocation."""
+    """(max_chars, total_chars) of page content — one narrow aggregate,
+    two Spark jobs and a ``collect``.
+
+    ``detect_spans_auto`` runs it only when neither given stats nor the
+    parquet footer bound (``footer_char_bound``) settle the path. At
+    warehouse scale these are table statistics (ANALYZE TABLE / Iceberg
+    column metrics); compute once and pass to detect_spans_auto rather
+    than re-scanning per invocation."""
     ln = F.greatest(
         F.length(F.coalesce(F.col("text"), F.lit(""))),
         F.length(F.coalesce(F.col("html"), F.lit(b""))),
@@ -488,6 +491,115 @@ def corpus_char_stats(pages: DataFrame) -> tuple[int, int]:
         F.max(ln).alias("mx"), F.sum(ln).alias("tot")
     ).collect()[0]
     return int(st["mx"] or 0), int(st["tot"] or 0)
+
+
+_CONTENT_COLS = ("html", "text")
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _name(jobj) -> str:
+    return jobj.getClass().getSimpleName()
+
+
+def footer_char_bound(pages: DataFrame) -> int | None:
+    """An upper bound on any page's ``html``/``text`` length, read from
+    parquet footers without a Spark job; None when it cannot be proven.
+
+    The bound is the largest ``total_uncompressed_size`` of an ``html``
+    or ``text`` column chunk in any row group of ``pages.inputFiles()``:
+    every encoding stores a value's bytes inside its own column chunk
+    (plain, or once in the chunk's dictionary page), and a string has at
+    most as many chars as UTF-8 bytes. It holds only when the optimized
+    plan is Project/Filter nodes, projecting bare attributes, over one
+    parquet ``LogicalRelation`` of ``file:`` URIs whose ``html``/``text``
+    are string or binary data columns. Anything else — a derived column,
+    a cached frame, another source, a partition column, a remote file
+    system — returns None."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    plan = pages._jdf.queryExecution().optimizedPlan()
+    while _name(plan) in ("Project", "Filter"):
+        if _name(plan) == "Project" and any(
+            _name(e) != "AttributeReference" for e in _seq(plan.projectList())
+        ):
+            return None
+        plan = plan.child()
+    if _name(plan) != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (
+        _name(rel) != "HadoopFsRelation"
+        or _name(rel.fileFormat()) != "ParquetFileFormat"
+    ):
+        return None
+    types = {f.name.lower(): f.dataType for f in pages.schema.fields}
+    parts = {c.lower() for c in rel.partitionSchema().fieldNames()}
+    for c in _CONTENT_COLS:
+        if not isinstance(types.get(c), (StringType, BinaryType)) or c in parts:
+            return None
+    bound = 0
+    for uri in pages.inputFiles():
+        u = urlparse(uri)
+        if u.scheme != "file":
+            return None
+        meta = pq.read_metadata(unquote(u.path))
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            for j in range(rg.num_columns):
+                col = rg.column(j)
+                if col.path_in_schema.lower() in _CONTENT_COLS:
+                    bound = max(bound, col.total_uncompressed_size)
+    return bound
+
+
+def _path_decision(
+    pages: DataFrame,
+    ctx: DetectContext,
+    cores: int,
+    overhead_chars: int,
+    stats: "tuple[int, int] | None",
+) -> tuple[str, str, "tuple[int, int] | None"]:
+    """``detect_path_decision`` plus the corpus stats it used, if any."""
+    refusal = chunking_refusal(ctx)
+    if refusal:
+        return "fused", f"refused: {refusal}", None
+    if stats is not None:
+        return choose_detect_path(*stats, cores, overhead_chars), "given stats", stats
+    # choose_detect_path chunks only when max_chars clears a threshold
+    # that grows with total_chars, so fused for (bound ≥ every page's
+    # length, total=0) is fused for the corpus.
+    ub = footer_char_bound(pages)
+    if ub is not None and choose_detect_path(ub, 0, cores, overhead_chars) == "fused":
+        return "fused", "footer bound", None
+    stats = corpus_char_stats(pages)
+    return choose_detect_path(*stats, cores, overhead_chars), "stats", stats
+
+
+def detect_path_decision(
+    pages: DataFrame,
+    ctx: DetectContext,
+    cores: int,
+    overhead_chars: int = AUTO_OVERHEAD_CHARS,
+    stats: "tuple[int, int] | None" = None,
+) -> tuple[str, str]:
+    """(path, reason) that ``detect_spans_auto`` takes for ``pages``.
+
+    Reasons, in the order they are tried:
+
+    - ``refused: …`` — ``chunking_refusal`` rules chunking out; fused,
+      without looking at the corpus;
+    - ``given stats`` — the caller's ``(max_chars, total_chars)``;
+    - ``footer bound`` — ``footer_char_bound`` proves fused without a
+      Spark job;
+    - ``stats`` — one ``corpus_char_stats`` pass decides.
+    """
+    path, reason, _ = _path_decision(pages, ctx, cores, overhead_chars, stats)
+    return path, reason
 
 
 def detect_spans_auto(
@@ -501,15 +613,22 @@ def detect_spans_auto(
     """Skew-aware pages → spans: pick fused vs chunked from the corpus
     shape instead of always paying chunk overhead.
 
-    Corpus shape comes from ``stats=(max_chars, total_chars)`` when the
-    caller has table statistics (the warehouse case — Iceberg column
-    metrics are free), else from one narrow ``corpus_char_stats`` pass.
-    The decision feeds ``choose_detect_path``; models the chunk frame
-    cannot reproduce (sequential decode, word_overlap) always take the
-    fused path. When chunking wins, ``chunk_lines`` defaults to spreading
-    the biggest document over ~2 chunks per core (floor 2,500 so
-    per-chunk overhead stays amortized), and only docs beyond twice their
-    fair share are chunked.
+    The choice is ``detect_path_decision``'s. Models the chunk frame
+    cannot reproduce (sequential decode, word_overlap) take the fused
+    path before anything is read. Otherwise corpus shape comes from
+    ``stats=(max_chars, total_chars)`` when the caller has table
+    statistics (the warehouse case — Iceberg column metrics are free);
+    else, for a plain parquet scan, from the footers: when the largest
+    ``html``/``text`` column chunk alone cannot clear the chunk threshold
+    (``footer_char_bound``), the fused path is proven with no Spark job.
+    Only when none of these settle it does one narrow
+    ``corpus_char_stats`` pass feed ``choose_detect_path`` — a derived
+    content column, a cached frame, a non-parquet or non-``file:``
+    source, or a row group large enough to hold a mega document. When
+    chunking wins, ``chunk_lines`` defaults to spreading the biggest
+    document over ~2 chunks per core (floor 2,500 so per-chunk overhead
+    stays amortized), and only docs beyond twice their fair share are
+    chunked.
 
     A straggler-first rearrangement (round-robin the big docs into the
     stage's first partitions so they start at t=0 — LPT via partition
@@ -523,12 +642,9 @@ def detect_spans_auto(
     """
     spark = pages.sparkSession
     cores = cores or spark.sparkContext.defaultParallelism
-    mx, tot = stats if stats is not None else corpus_char_stats(pages)
-
-    if (
-        chunking_refusal(ctx) is None
-        and choose_detect_path(mx, tot, cores, overhead_chars) == "chunked"
-    ):
+    path, _, st = _path_decision(pages, ctx, cores, overhead_chars, stats)
+    if path == "chunked":
+        mx, tot = st
         est_mx_lines = max(mx // 40, 1)  # ~40 chars/line of web text
         chunk_lines = chunk_lines or max(2_500, est_mx_lines // (2 * cores))
         mega_doc_chars = max(int(2 * tot / cores), 200_000)

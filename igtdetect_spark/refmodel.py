@@ -26,6 +26,7 @@ from __future__ import annotations
 import gzip
 import pickle
 from dataclasses import dataclass, field
+from functools import cached_property
 
 import numpy as np
 
@@ -143,6 +144,18 @@ class ModelWeights:
     @property
     def n_base(self) -> int:
         return len(self.base_names)
+
+    @cached_property
+    def has_prev_tag(self) -> bool:
+        """Whether the vocabulary carries sequential-decode features."""
+        return any(k.startswith("prev_tag_") for k in self.base_index)
+
+    @cached_property
+    def word_columns(self) -> dict[str, int]:
+        """token → base column of its ``word_<token>`` feature."""
+        return {
+            k[5:]: j for k, j in self.base_index.items() if k.startswith("word_")
+        }
 
     def decision_doc(self, X: np.ndarray) -> np.ndarray:
         """Per-line OvR decision values for one document.

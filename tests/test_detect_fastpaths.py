@@ -1,0 +1,337 @@
+"""Exactness of the batch token index and the gram fast path, and the
+job-free fused decision of ``detect_spans_auto``.
+
+Everything is built from the synthetic generator's word pools and a model
+trained on its corpus, so no reference data directory is needed.
+"""
+
+from __future__ import annotations
+
+import random
+import re
+import sys
+import time
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from igtdetect_spark.config import DEFAULT_CONFIG
+from igtdetect_spark.featurespec import Lexicons, split_words
+from igtdetect_spark.operators.segment import _plain_frame, batch_to_columns
+from igtdetect_spark.operators.vectorized import (
+    _folded_gram_re,
+    base_feature_matrix,
+    gram_feature,
+    gram_fold,
+)
+from igtdetect_spark.oracle import corpus as C
+from igtdetect_spark.oracle.corpus import doc_from_text, make_doc
+from igtdetect_spark.oracle.pipeline import _base_matrix, extract_doc_features
+from igtdetect_spark.training import train_model
+
+CFG = DEFAULT_CONFIG.with_(prev_tag=False, real_oov_features=True)
+
+
+def _lexicons(gram_list=None) -> Lexicons:
+    atoms = [a for g in C.GLOSS_TOKENS for a in re.split(r"[-._]", g) if a]
+    grams = sorted({a for a in atoms if a.isupper()})
+    prose = [w for s in C.PROSE + C.TRANSLATIONS for w in split_words(s)]
+    return Lexicons(
+        langnames=frozenset(n.lower() for n, _ in C.LANG_NAMES if len(n) >= 5),
+        gram_list=(
+            sorted({g.lower() for g in grams if len(g) >= 3})
+            if gram_list is None else gram_list
+        ),
+        gram_list_cased=grams,
+        en_words=frozenset(prose),
+        gls_words=frozenset(a.lower() for a in atoms),
+        met_words=frozenset(prose + [a.lower() for a in C.AUTHORS]),
+    )
+
+
+@pytest.fixture(scope="module")
+def lex():
+    return _lexicons()
+
+
+def _train(lex, cfg):
+    fds, labels = [], []
+    for d in C.make_corpus(20, seed=7):
+        doc = doc_from_text(d.url, d.text, d.gold_tags)
+        for li in extract_doc_features(doc, lex, cfg):
+            fds.append(li.feats)
+            labels.append(li.norm_label)
+    return train_model(fds, labels, max_features=5000, iters=50)
+
+
+@pytest.fixture(scope="module")
+def model(lex):
+    return _train(lex, CFG)
+
+
+# Lines next to which a re.I search and a plain lower-case search could
+# part: codepoints re.I folds onto ASCII letters, right beside gram
+# strings, grams at both line edges, Cyrillic, token-less lines.
+TRICKY = [
+    "İstanbul ACC det",
+    "DETİ ſacc nom",
+    "NOM",
+    "aKk ACC",
+    "perfſ erg",
+    "ERG. ﬆ acc",
+    "жена NOM-DAT пишу́",
+    "(1)  кни́га   acc",
+    "--- ... ---",
+    "()",
+    "“ ” *",
+    "Russian and French are languages",
+    "they sent me schulze quechua",
+    "det",
+    "1sg poss",
+    "ıacc ſdat",
+    "the poſs",
+    "2ſg",
+]
+
+
+def _pages() -> list[tuple[str, str]]:
+    pages = [(d.url, d.text) for d in (make_doc(i, seed=11) for i in range(30))]
+    rng = random.Random(3)
+    for k in range(4):
+        lines = TRICKY[:]
+        rng.shuffle(lines)
+        pages.append((f"http://tricky/{k}", "\n".join(lines[:8]) + "\n\n"
+                      + "\n".join(lines[8:])))
+    return pages
+
+
+@pytest.mark.parametrize("variant", ["real_oov", "word_overlap", "fixed_dia"])
+def test_base_feature_matrix_equals_oracle_rows(lex, model, variant):
+    """Every row of base_feature_matrix equals the oracle's per-line
+    features (extract_doc_features → its base matrix), including empty
+    lines, token-less lines and non-ASCII case-folding traps."""
+    cfg = {
+        "real_oov": CFG,
+        "word_overlap": CFG.with_(word_overlap=True),
+        "fixed_dia": CFG.with_(buggy_diacritic_class=False),
+    }[variant]
+    if cfg is not CFG:
+        model = _train(lex, cfg)
+    pages = _pages()
+    cols, slices = batch_to_columns(
+        [u for u, _ in pages], [None] * len(pages), [t for _, t in pages]
+    )
+    # Empty lines never come out of segmentation, but scored line tables
+    # may hold them: blank a few lines on both sides.
+    blank = set(range(5, len(cols["text"]), 97))
+    for k in blank:
+        cols["text"][k] = ""
+    X = base_feature_matrix(_plain_frame(cols), lex, cfg, model)
+
+    for (url, text), (_, a, b) in zip(pages, slices):
+        doc = doc_from_text(url, text)
+        for k, line in zip(range(a, b), doc.lines()):
+            if k in blank:
+                line.text = ""
+        want = _base_matrix(extract_doc_features(doc, lex, cfg), model)
+        np.testing.assert_array_equal(X[a:b], want, err_msg=url)
+
+    fired = X.sum(axis=0)
+    for name in ("has_grams", "has_langname", "high_oov_rate",
+                 "high_gls_oov", "has_cyr"):
+        assert fired[model.base_index[name]] > 0, name
+    assert any(fired[j] for n, j in model.base_index.items()
+               if n.startswith("word_"))
+
+
+def test_gram_fast_path_equals_gram_re(lex):
+    texts = [line for _, t in _pages() for line in t.split("\n")]
+    texts += ["", "K", "ſ", "İ", "ı"]
+    assert _folded_gram_re(tuple(lex.gram_list)) is not None
+    want = np.array([
+        bool(lex.gram_re.search(t) or lex.gram_cased_re.search(t))
+        for t in texts
+    ])
+    np.testing.assert_array_equal(gram_feature(texts, lex), want)
+    assert want.any() and not want.all()
+
+
+def test_gram_list_with_metacharacter_takes_the_regex_path():
+    lx = _lexicons(gram_list=["acc", "n.m", "erg"])
+    assert _folded_gram_re(tuple(lx.gram_list)) is None
+    texts = ["nAm here", "NOM", "xERGx", "none", "İ"]
+    got = gram_feature(texts, lx)
+    want = [bool(lx.gram_re.search(t) or lx.gram_cased_re.search(t))
+            for t in texts]
+    assert got.tolist() == want == [True, True, True, False, False]
+
+
+def test_gram_fold_matches_re_ignorecase_on_every_codepoint():
+    """gram_fold keeps every codepoint's position, and yields an ASCII
+    letter or digit exactly where re.I matches that letter or digit."""
+    chars = "".join(
+        chr(c) for c in range(sys.maxunicode + 1) if not 0xD800 <= c <= 0xDFFF
+    )
+    folded = gram_fold(chars)
+    assert len(folded) == len(chars)
+    for p in "0123456789abcdefghijklmnopqrstuvwxyz":
+        ci = [m.start() for m in re.finditer(p, chars, re.I)]
+        assert ci == [m.start() for m in re.finditer(p, folded)], p
+
+
+# ---------------------------------------------------------------------------
+# detect_path_decision
+# ---------------------------------------------------------------------------
+
+PAGES_ARROW = pa.schema([
+    pa.field("url", pa.string(), nullable=False),
+    pa.field("html", pa.binary()),
+    pa.field("text", pa.string()),
+    pa.field("lang", pa.string()),
+])
+
+
+@pytest.fixture(scope="module")
+def pages_dir(tmp_path_factory):
+    docs = [make_doc(i, seed=5, as_html=i % 5 == 1) for i in range(40)]
+    rows = [
+        {"url": r["url"], "html": r["html"], "text": r["text"],
+         "lang": "en" if i % 2 else "de"}
+        for i, r in enumerate(C.corpus_rows(docs))
+    ]
+    d = tmp_path_factory.mktemp("pages")
+    table = pa.Table.from_pylist(rows, schema=PAGES_ARROW)
+    for k in range(4):
+        pq.write_table(table.slice(10 * k, 10), str(d / f"part-{k}.parquet"))
+    return d
+
+
+@pytest.fixture(scope="module")
+def ctx(spark, model, lex):
+    from igtdetect_spark.plans.pipeline import DetectContext
+
+    return DetectContext(spark, model, lex, CFG)
+
+
+def _decide(spark, pages, ctx, group, **kw):
+    """detect_path_decision under a job group: (path, reason, number of
+    Spark jobs it ran). The status tracker learns of jobs from the
+    listener bus, in order, so a sentinel job is run afterwards in a
+    group of its own and waited for: once it shows, every job of the
+    decision's group does too."""
+    from igtdetect_spark.plans.chunked import detect_path_decision
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup(group, group)
+        path, reason = detect_path_decision(pages, ctx, 4, **kw)
+        sc.setJobGroup(group + ":sentinel", group)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + ":sentinel"):
+        assert time.monotonic() < deadline, "sentinel job never recorded"
+        time.sleep(0.05)
+    return path, reason, len(tracker.getJobIdsForGroup(group))
+
+
+def test_decision_footer_bound_for_parquet_scans(spark, ctx, pages_dir):
+    pages = spark.read.parquet(str(pages_dir))
+    assert _decide(spark, pages, ctx, "fp:scan") == ("fused", "footer bound", 0)
+    filtered = pages.filter("lang = 'en'").select("url", "html", "text")
+    assert _decide(spark, filtered, ctx, "fp:filter") == (
+        "fused", "footer bound", 0
+    )
+
+
+def test_decision_falls_back_to_stats_when_bound_is_too_large(
+    spark, ctx, pages_dir
+):
+    from igtdetect_spark.plans.chunked import (
+        choose_detect_path,
+        corpus_char_stats,
+        footer_char_bound,
+    )
+
+    pages = spark.read.parquet(str(pages_dir))
+    mx, tot = corpus_char_stats(pages)
+    assert footer_char_bound(pages) >= mx > 10
+    path, reason, jobs = _decide(
+        spark, pages, ctx, "fp:small-overhead", overhead_chars=10
+    )
+    assert (path, reason) == (choose_detect_path(mx, tot, 4, 10), "stats")
+    assert jobs > 0
+
+
+def test_decision_uses_stats_for_other_frames(spark, ctx, pages_dir, tmp_path):
+    from pyspark.sql import functions as F
+
+    derived = spark.read.parquet(str(pages_dir)).withColumn(
+        "text", F.upper("text")
+    )
+    spark.read.parquet(str(pages_dir)).write.parquet(str(tmp_path / "copy"))
+    cached = spark.read.parquet(str(tmp_path / "copy")).cache()
+    spark.read.parquet(str(pages_dir)).select("url", "text").write.json(
+        str(tmp_path / "json")
+    )
+    js = spark.read.schema("url string, html binary, text string").json(
+        str(tmp_path / "json")
+    )
+    try:
+        for name, df in (("derived", derived), ("cached", cached), ("json", js)):
+            path, reason, jobs = _decide(spark, df, ctx, f"fp:{name}")
+            assert (path, reason) == ("fused", "stats"), name
+            assert jobs > 0, name
+    finally:
+        cached.unpersist(blocking=True)
+
+
+def test_decision_refusal_runs_no_job(spark, lex, model, pages_dir):
+    from igtdetect_spark.plans.pipeline import DetectContext
+
+    ctx_wo = DetectContext(spark, model, lex, CFG.with_(word_overlap=True))
+    derived = spark.read.parquet(str(pages_dir)).selectExpr(
+        "url", "html", "upper(text) AS text"
+    )
+    path, reason, jobs = _decide(spark, derived, ctx_wo, "fp:refused")
+    assert path == "fused" and reason.startswith("refused: ")
+    assert jobs == 0
+
+
+def test_auto_with_a_mega_document_takes_the_chunked_plan(
+    spark, ctx, pages_dir, tmp_path
+):
+    """A row group holding a mega-document defeats the footer bound; the
+    stats pass then picks the chunked plan, which reproduces fused."""
+    from igtdetect_spark.plans.chunked import (
+        detect_path_decision,
+        detect_spans_auto,
+    )
+    from igtdetect_spark.plans.pipeline import detect_spans_fused
+
+    mega = make_doc(99, seed=5, n_paragraphs=300)
+    table = pa.Table.from_pylist(
+        [{"url": mega.url, "html": None, "text": mega.text, "lang": "en"}],
+        schema=PAGES_ARROW,
+    )
+    d = tmp_path / "skewed"
+    d.mkdir()
+    for f in pages_dir.iterdir():
+        (d / f.name).write_bytes(f.read_bytes())
+    pq.write_table(table, str(d / "part-mega.parquet"))
+    pages = spark.read.parquet(str(d))
+
+    assert detect_path_decision(pages, ctx, 4, overhead_chars=1_000) == (
+        "chunked", "stats"
+    )
+    auto = detect_spans_auto(pages, ctx, cores=4, overhead_chars=1_000)
+    plan = auto._jdf.queryExecution().logical().toString()
+    assert plan.count("MapInPandas") > 1
+    key = lambda r: tuple(tuple(v) if isinstance(v, list) else v for v in r)
+    assert sorted(map(key, auto.collect())) == sorted(
+        map(key, detect_spans_fused(pages, ctx).collect())
+    )

@@ -296,7 +296,9 @@ class TestWordOverlap:
             assert cached_ids() - before, "shingle relation not persisted"
             released = release_plan_caches(df)
             assert released == 1
-        assert cached_ids() == before  # nothing leaked
+        # nothing leaked; RDDs persisted by earlier tests may be cleaned
+        # meanwhile, so only new ids count
+        assert cached_ids() - before == set()
 
     def test_minhash_partial_band_not_dropped(self, spark):
         """n_perms not divisible by band_size: the trailing partial band
