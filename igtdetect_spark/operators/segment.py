@@ -18,10 +18,12 @@ from __future__ import annotations
 
 from typing import Iterable, Iterator, Optional
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType
 
 from ..oracle.freki import FrekiDoc, parse_freki, safe_mode
 from ..segmentation import DEFAULT_FONT, extract_page_text, segment_text_columns
@@ -84,17 +86,39 @@ def batch_to_columns(
     return cols, slices
 
 
+# numpy dtype of each numeric LINES_SCHEMA column; the rest are object.
+_NP_DTYPES = {
+    f.name: np.int64 if isinstance(f.dataType, IntegerType) else np.float64
+    for f in LINES_SCHEMA.fields
+    if isinstance(f.dataType, (IntegerType, DoubleType))
+}
+
+
+def _typed(name: str, values: list, n: int) -> np.ndarray:
+    """One column of ``_plain_frame`` as the array ``pd.DataFrame`` would
+    infer for it, built without the per-cell inference."""
+    dtype = _NP_DTYPES.get(name)
+    if dtype is not None:
+        return np.array(values, dtype=dtype)
+    out = np.empty(n, dtype=object)
+    out[:] = values
+    return out
+
+
 def _plain_frame(cols: dict[str, list]) -> pd.DataFrame:
     """Internal scoring frame for plain-text pages: no font info (all
     lines carry the single default font ⇒ font features are identically
-    False, so the font columns are nulled and the font loop is skipped)."""
+    False, so the font columns are nulled and the font loop is skipped).
+
+    Columns come in typed — int64 line numbers and pages, float64 llx
+    values, object for the rest — so pandas infers nothing per cell."""
     n = len(cols["line_no"])
-    pdf = pd.DataFrame(cols)
-    pdf["fonts"] = None
-    pdf["def_font_id"] = DEFAULT_FONT[0]
-    pdf["def_font_size"] = DEFAULT_FONT[1]
-    pdf["iscore"] = None
-    return pdf
+    data = {k: _typed(k, v, n) for k, v in cols.items()}
+    data["fonts"] = np.full(n, None, dtype=object)
+    data["def_font_id"] = np.full(n, DEFAULT_FONT[0], dtype=object)
+    data["def_font_size"] = np.full(n, DEFAULT_FONT[1], dtype=np.float64)
+    data["iscore"] = np.full(n, None, dtype=object)
+    return pd.DataFrame(data, copy=False)
 
 
 def segment_pages(pages: DataFrame, html_main_content: bool = False) -> DataFrame:

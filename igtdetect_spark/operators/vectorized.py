@@ -1,11 +1,19 @@
 """Vectorized (Arrow-batch) feature extraction + scoring kernels.
 
-These run inside ``mapInPandas``/``applyInPandas`` on executors. All regex
-features are evaluated with pandas ``str.contains`` over the whole batch —
-the same Python ``re`` engine as the oracle (``featurespec``), so parity is
-by construction, while the loop is C-level. Token-set features (word_*,
-has_langname, the OOV rates) go through one ``TokenIndex`` per batch: a
-set lookup per *distinct* token, then numpy gathers and bincounts.
+These run inside ``mapInPandas``/``applyInPandas`` on executors.
+``BatchFeatures`` factorizes the line texts once and computes every
+text-only feature over the *distinct* texts (``text_feature_columns``),
+then gathers those boolean columns, and each line's ``word_*`` hits, to
+the lines. Only the layout features (``layout_feature_columns``) and the
+word-overlap context features run per line. This saves work in
+proportion to how often a batch repeats a line; a batch with no repeats
+pays the ``factorize`` and the gathers.
+
+Regex features are direct ``pattern.search`` calls over a list of texts —
+the same Python ``re`` engine as the oracle (``featurespec``), so parity
+is by construction. Token-set features (word_*, has_langname, the OOV
+rates) go through one ``TokenIndex`` over the distinct texts: a set
+lookup per *distinct* token, then numpy gathers and bincounts.
 
 The scoring kernel materializes the per-document boolean base-feature
 matrix and applies the context-decomposed weights (``refmodel``) as numpy
@@ -118,6 +126,8 @@ def tokenize_series(texts: pd.Series) -> pd.Series:
 class TokenIndex:
     """A batch's tokens flattened once and factorized.
 
+    ``tokens`` holds one token list per line (``BatchFeatures`` passes one
+    per distinct line text).
     ``rows[k]`` is the line of the k-th token and ``codes[k]`` its slot in
     ``uniques``; ``lens`` counts tokens per line. A token-set feature is
     then one set lookup per distinct token plus a gather — web text
@@ -145,6 +155,21 @@ class TokenIndex:
         out = np.zeros(self.n, dtype=bool)
         out[self.rows[tok_mask]] = True
         return out
+
+    def take_lines(
+        self, tok_mask: np.ndarray, codes: np.ndarray
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """Line i carries the tokens of token-list row ``codes[i]``.
+        Returns every (line i, token position k) pair whose token is in
+        ``tok_mask``, as two arrays, without a Python loop."""
+        hits = np.flatnonzero(tok_mask)
+        counts = np.bincount(self.rows[hits], minlength=self.n)
+        per = counts[codes]
+        rows = np.repeat(np.arange(len(codes)), per)
+        # hits are grouped by token-list row (``rows`` is sorted), so the
+        # hits of row c are hits[start[c] : start[c] + counts[c]].
+        shift = (np.cumsum(counts) - counts)[codes] - (np.cumsum(per) - per)
+        return rows, hits[np.repeat(shift, per) + np.arange(len(rows))]
 
     def rate_per_line(self, tok_mask: np.ndarray) -> np.ndarray:
         """Share of each line's tokens in ``tok_mask`` (0.0 for token-less
@@ -244,31 +269,30 @@ def gram_feature(texts: list[str], lex: Lexicons) -> np.ndarray:
     return v
 
 
-def static_feature_columns(
-    pdf: pd.DataFrame,
+def text_feature_columns(
+    texts: list[str],
     toks: TokenIndex,
     lex: Lexicons,
     cfg: PipelineConfig,
 ) -> dict[str, np.ndarray]:
-    """name → boolean ndarray for every enabled non-word feature.
+    """name → boolean ndarray over ``texts`` for every enabled text feature
+    but the ``word_*`` ones (``toks`` indexes the tokens of ``texts``).
 
-    ``pdf`` needs: text, page, llx, doc_llx_mode, block_id, prev_block_id,
-    next_block_id, fonts, def_font_id, def_font_size, iscore.
-    """
+    Each feature is a function of the line's text alone, so callers pass
+    a batch's *distinct* texts and gather the rows back per line."""
     out: dict[str, np.ndarray] = {}
-    s = pdf["text"].fillna("")
+    if not cfg.text_feats_enabled:
+        return out
     # Plain-list + direct ``pattern.search`` beats pandas ``str.contains``
     # ~3× on the regex features (profiled on a 100k-line mega: 0.87 s of
     # the 1.28 s regex cost was pandas ``_str_map`` per-call overhead, not
     # the C regex engine). Per-LINE semantics are unchanged — each search
     # still runs against one line's string.
-    texts_list: list[str] = s.tolist()
-    n = len(pdf)
+    n = len(texts)
     te = cfg.enabled_text_feats
-    fe = cfg.enabled_freki_feats
 
     def contains(pat) -> np.ndarray:
-        return _search_lines(pat, texts_list)
+        return _search_lines(pat, texts)
 
     # Every unicode-script class matches only non-ASCII codepoints, and most
     # web-text lines are pure ASCII — evaluate the 9 script regexes on the
@@ -282,154 +306,167 @@ def static_feature_columns(
         nonlocal _non_ascii_mask, _non_ascii_texts
         if _non_ascii_mask is None:
             _non_ascii_mask = np.fromiter(
-                (not t.isascii() for t in texts_list), dtype=bool, count=n
+                (not t.isascii() for t in texts), dtype=bool, count=n
             )
-            _non_ascii_texts = [t for t in texts_list if not t.isascii()]
+            _non_ascii_texts = [t for t in texts if not t.isascii()]
         res = np.zeros(n, dtype=bool)
         if _non_ascii_texts:
             res[_non_ascii_mask] = _search_lines(pat, _non_ascii_texts)
         return res
 
-    if cfg.text_feats_enabled:
-        if T_HAS_LANGNAME in te:
-            out[T_HAS_LANGNAME] = toks.any_per_line(toks.member(lex.langnames))
-        if T_HAS_GRAMS in te:
-            out[T_HAS_GRAMS] = gram_feature(texts_list, lex)
-        if T_HAS_PARENTHETICAL in te:
-            out[T_HAS_PARENTHETICAL] = contains(_RE_PARENTHETICAL)
-        if T_HAS_CITATION in te:
-            out[T_HAS_CITATION] = contains(_RE_CITATION)
-        if T_HAS_ASTERISK in te:
-            out[T_HAS_ASTERISK] = np.fromiter(
-                ("*" in t for t in texts_list), dtype=bool, count=n
-            )
-        if T_HAS_UNDERSCORE in te:
-            out[T_HAS_UNDERSCORE] = np.fromiter(
-                ("_" in t for t in texts_list), dtype=bool, count=n
-            )
-        if T_HAS_BRACKETING in te:
-            out[T_HAS_BRACKETING] = contains(_RE_BRACKETING)
-        if T_HAS_QUOTATION in te:
-            out[T_HAS_QUOTATION] = contains(_RE_QUOTATION)
-        if T_HAS_NUMBERING in te:
-            out[T_HAS_NUMBERING] = contains(_RE_NUMBERING)
-        if T_HAS_LEADING_WHITESPACE in te:
-            out[T_HAS_LEADING_WHITESPACE] = contains(_RE_LEADING_WS)
+    if T_HAS_LANGNAME in te:
+        out[T_HAS_LANGNAME] = toks.any_per_line(toks.member(lex.langnames))
+    if T_HAS_GRAMS in te:
+        out[T_HAS_GRAMS] = gram_feature(texts, lex)
+    if T_HAS_PARENTHETICAL in te:
+        out[T_HAS_PARENTHETICAL] = contains(_RE_PARENTHETICAL)
+    if T_HAS_CITATION in te:
+        out[T_HAS_CITATION] = contains(_RE_CITATION)
+    if T_HAS_ASTERISK in te:
+        out[T_HAS_ASTERISK] = np.fromiter(
+            ("*" in t for t in texts), dtype=bool, count=n
+        )
+    if T_HAS_UNDERSCORE in te:
+        out[T_HAS_UNDERSCORE] = np.fromiter(
+            ("_" in t for t in texts), dtype=bool, count=n
+        )
+    if T_HAS_BRACKETING in te:
+        out[T_HAS_BRACKETING] = contains(_RE_BRACKETING)
+    if T_HAS_QUOTATION in te:
+        out[T_HAS_QUOTATION] = contains(_RE_QUOTATION)
+    if T_HAS_NUMBERING in te:
+        out[T_HAS_NUMBERING] = contains(_RE_NUMBERING)
+    if T_HAS_LEADING_WHITESPACE in te:
+        out[T_HAS_LEADING_WHITESPACE] = contains(_RE_LEADING_WS)
 
-        if cfg.real_oov_features:
-            rates = {
-                key: toks.rate_per_line(~toks.member(ws))
-                for key, ws in (("en", lex.en_words), ("gls", lex.gls_words),
-                                ("met", lex.met_words))
-            }
-            if T_HIGH_OOV_RATE in te:
-                out[T_HIGH_OOV_RATE] = rates["en"] >= cfg.high_oov
-            if T_MED_OOV_RATE in te:
-                out[T_MED_OOV_RATE] = (rates["en"] > cfg.med_oov) & (rates["en"] < cfg.high_oov)
-            if T_HIGH_GLS_OOV_RATE in te:
-                out[T_HIGH_GLS_OOV_RATE] = rates["gls"] > cfg.high_oov
-            if T_HIGH_MET_OOV_RATE in te:
-                out[T_HIGH_MET_OOV_RATE] = rates["met"] > cfg.high_oov
-        # dead-by-default OOV features are always False → never fire →
-        # contribute nothing to X nor to fired-name lists; omit entirely.
+    if cfg.real_oov_features:
+        rates = {
+            key: toks.rate_per_line(~toks.member(ws))
+            for key, ws in (("en", lex.en_words), ("gls", lex.gls_words),
+                            ("met", lex.met_words))
+        }
+        if T_HIGH_OOV_RATE in te:
+            out[T_HIGH_OOV_RATE] = rates["en"] >= cfg.high_oov
+        if T_MED_OOV_RATE in te:
+            out[T_MED_OOV_RATE] = (rates["en"] > cfg.med_oov) & (rates["en"] < cfg.high_oov)
+        if T_HIGH_GLS_OOV_RATE in te:
+            out[T_HIGH_GLS_OOV_RATE] = rates["gls"] > cfg.high_oov
+        if T_HIGH_MET_OOV_RATE in te:
+            out[T_HIGH_MET_OOV_RATE] = rates["met"] > cfg.high_oov
+    # dead-by-default OOV features are always False → never fire →
+    # contribute nothing to X nor to fired-name lists; omit entirely.
 
-        hj = hg = hk = hc = ha = hd = None
-        need_uni = T_HAS_UNI in te
-        if T_HAS_JPN in te or need_uni:
-            hj = (
-                contains_nonascii(_RE_KANJI)
-                | contains_nonascii(_RE_HIRAGANA)
-                | contains_nonascii(_RE_KATAKANA)
-            )
-        if T_HAS_GRK in te or need_uni:
-            hg = contains_nonascii(_RE_GRK)
-        if T_HAS_KOR in te or need_uni:
-            hk = contains_nonascii(_RE_KOR)
-        if T_HAS_CYR in te or need_uni:
-            hc = contains_nonascii(_RE_CYR)
-        if T_HAS_ACC in te or need_uni:
-            ha = contains_nonascii(_RE_ACC_LAT)
-        if T_HAS_DIA in te or need_uni:
-            hd = contains_nonascii(
-                _RE_DIA_BUGGY if cfg.buggy_diacritic_class else _RE_DIA_FIXED
-            )
-        if T_HAS_JPN in te:
-            out[T_HAS_JPN] = hj
-        if T_HAS_GRK in te:
-            out[T_HAS_GRK] = hg
-        if T_HAS_KOR in te:
-            out[T_HAS_KOR] = hk
-        if T_HAS_CYR in te:
-            out[T_HAS_CYR] = hc
-        if T_HAS_ACC in te:
-            out[T_HAS_ACC] = ha
-        if T_HAS_DIA in te:
-            out[T_HAS_DIA] = hd
-        if need_uni:
-            out[T_HAS_UNI] = hc | hd | hg | hj | ha | hk
-        if T_HAS_YEAR in te:
-            out[T_HAS_YEAR] = contains(_RE_YEAR)
+    hj = hg = hk = hc = ha = hd = None
+    need_uni = T_HAS_UNI in te
+    if T_HAS_JPN in te or need_uni:
+        hj = (
+            contains_nonascii(_RE_KANJI)
+            | contains_nonascii(_RE_HIRAGANA)
+            | contains_nonascii(_RE_KATAKANA)
+        )
+    if T_HAS_GRK in te or need_uni:
+        hg = contains_nonascii(_RE_GRK)
+    if T_HAS_KOR in te or need_uni:
+        hk = contains_nonascii(_RE_KOR)
+    if T_HAS_CYR in te or need_uni:
+        hc = contains_nonascii(_RE_CYR)
+    if T_HAS_ACC in te or need_uni:
+        ha = contains_nonascii(_RE_ACC_LAT)
+    if T_HAS_DIA in te or need_uni:
+        hd = contains_nonascii(
+            _RE_DIA_BUGGY if cfg.buggy_diacritic_class else _RE_DIA_FIXED
+        )
+    if T_HAS_JPN in te:
+        out[T_HAS_JPN] = hj
+    if T_HAS_GRK in te:
+        out[T_HAS_GRK] = hg
+    if T_HAS_KOR in te:
+        out[T_HAS_KOR] = hk
+    if T_HAS_CYR in te:
+        out[T_HAS_CYR] = hc
+    if T_HAS_ACC in te:
+        out[T_HAS_ACC] = ha
+    if T_HAS_DIA in te:
+        out[T_HAS_DIA] = hd
+    if need_uni:
+        out[T_HAS_UNI] = hc | hd | hg | hj | ha | hk
+    if T_HAS_YEAR in te:
+        out[T_HAS_YEAR] = contains(_RE_YEAR)
+    return out
 
-    if cfg.freki_feats_enabled:
-        if F_IS_INDENTED in fe:
-            llx = pdf["llx"].to_numpy(dtype=np.float64, na_value=0.0)
-            mode = pdf["doc_llx_mode"].to_numpy(dtype=np.float64, na_value=np.inf)
-            out[F_IS_INDENTED] = llx > mode
-        if F_IS_FIRST_PAGE in fe:
-            out[F_IS_FIRST_PAGE] = (
-                pdf["page"].to_numpy(dtype=np.float64, na_value=0) == 1
-            )
-        if F_PREV_LINE_SAME_BLOCK in fe:
-            out[F_PREV_LINE_SAME_BLOCK] = (
-                (pdf["prev_block_id"] == pdf["block_id"])
-                & pdf["prev_block_id"].notna()
-            ).to_numpy(dtype=bool)
-        if F_NEXT_LINE_SAME_BLOCK in fe:
-            out[F_NEXT_LINE_SAME_BLOCK] = (
-                (pdf["next_block_id"] == pdf["block_id"])
-                & pdf["next_block_id"].notna()
-            ).to_numpy(dtype=bool)
 
-        font_feats = {F_HAS_NONSTANDARD_FONT, F_HAS_SMALLER_FONT, F_HAS_LARGER_FONT} & fe
-        if font_feats:
-            nonstd = np.zeros(n, dtype=bool)
-            smaller = np.zeros(n, dtype=bool)
-            larger = np.zeros(n, dtype=bool)
-            def_ids = pdf["def_font_id"].to_numpy(dtype=object)
-            def_sizes = pdf["def_font_size"].to_numpy(dtype=object)
-            for i, fonts in enumerate(pdf["fonts"].to_numpy(dtype=object)):
-                if fonts is None:
-                    continue
-                did, dsz = def_ids[i], def_sizes[i]
-                for f in fonts:
-                    fid = f["font_id"] if isinstance(f, dict) else f[0]
-                    sz = f["size"] if isinstance(f, dict) else f[1]
-                    if did is not None and (fid != did or sz != dsz):
-                        nonstd[i] = True
-                    elif did is None:
-                        nonstd[i] = True
-                    if dsz is not None and sz < dsz:
-                        smaller[i] = True
-                    if dsz is not None and sz > dsz:
-                        larger[i] = True
-            if F_HAS_NONSTANDARD_FONT in fe:
-                out[F_HAS_NONSTANDARD_FONT] = nonstd
-            if F_HAS_SMALLER_FONT in fe:
-                out[F_HAS_SMALLER_FONT] = smaller
-            if F_HAS_LARGER_FONT in fe:
-                out[F_HAS_LARGER_FONT] = larger
+def layout_feature_columns(
+    pdf: pd.DataFrame, cfg: PipelineConfig
+) -> dict[str, np.ndarray]:
+    """name → boolean ndarray per line of ``pdf`` for every enabled layout
+    (freki) feature.
 
-        iscore_feats = {F_LOW_ISCORE, F_MED_ISCORE, F_HIGH_ISCORE} & fe
-        if iscore_feats:
-            sc = pdf["iscore"].to_numpy(dtype=np.float64, na_value=0.0)
-            sc = np.nan_to_num(sc, nan=0.0)
-            if F_LOW_ISCORE in fe:
-                out[F_LOW_ISCORE] = ~(sc >= cfg.low_iscore)
-            if F_MED_ISCORE in fe:
-                out[F_MED_ISCORE] = sc >= cfg.med_iscore
-            if F_HIGH_ISCORE in fe:
-                out[F_HIGH_ISCORE] = sc >= cfg.high_iscore
+    ``pdf`` needs: page, llx, doc_llx_mode, block_id, prev_block_id,
+    next_block_id, fonts, def_font_id, def_font_size, iscore.
+    """
+    out: dict[str, np.ndarray] = {}
+    if not cfg.freki_feats_enabled:
+        return out
+    n = len(pdf)
+    fe = cfg.enabled_freki_feats
+    if F_IS_INDENTED in fe:
+        llx = pdf["llx"].to_numpy(dtype=np.float64, na_value=0.0)
+        mode = pdf["doc_llx_mode"].to_numpy(dtype=np.float64, na_value=np.inf)
+        out[F_IS_INDENTED] = llx > mode
+    if F_IS_FIRST_PAGE in fe:
+        out[F_IS_FIRST_PAGE] = (
+            pdf["page"].to_numpy(dtype=np.float64, na_value=0) == 1
+        )
+    if F_PREV_LINE_SAME_BLOCK in fe:
+        out[F_PREV_LINE_SAME_BLOCK] = (
+            (pdf["prev_block_id"] == pdf["block_id"])
+            & pdf["prev_block_id"].notna()
+        ).to_numpy(dtype=bool)
+    if F_NEXT_LINE_SAME_BLOCK in fe:
+        out[F_NEXT_LINE_SAME_BLOCK] = (
+            (pdf["next_block_id"] == pdf["block_id"])
+            & pdf["next_block_id"].notna()
+        ).to_numpy(dtype=bool)
 
+    font_feats = {F_HAS_NONSTANDARD_FONT, F_HAS_SMALLER_FONT, F_HAS_LARGER_FONT} & fe
+    if font_feats:
+        nonstd = np.zeros(n, dtype=bool)
+        smaller = np.zeros(n, dtype=bool)
+        larger = np.zeros(n, dtype=bool)
+        def_ids = pdf["def_font_id"].to_numpy(dtype=object)
+        def_sizes = pdf["def_font_size"].to_numpy(dtype=object)
+        for i, fonts in enumerate(pdf["fonts"].to_numpy(dtype=object)):
+            if fonts is None:
+                continue
+            did, dsz = def_ids[i], def_sizes[i]
+            for f in fonts:
+                fid = f["font_id"] if isinstance(f, dict) else f[0]
+                sz = f["size"] if isinstance(f, dict) else f[1]
+                if did is not None and (fid != did or sz != dsz):
+                    nonstd[i] = True
+                elif did is None:
+                    nonstd[i] = True
+                if dsz is not None and sz < dsz:
+                    smaller[i] = True
+                if dsz is not None and sz > dsz:
+                    larger[i] = True
+        if F_HAS_NONSTANDARD_FONT in fe:
+            out[F_HAS_NONSTANDARD_FONT] = nonstd
+        if F_HAS_SMALLER_FONT in fe:
+            out[F_HAS_SMALLER_FONT] = smaller
+        if F_HAS_LARGER_FONT in fe:
+            out[F_HAS_LARGER_FONT] = larger
+
+    iscore_feats = {F_LOW_ISCORE, F_MED_ISCORE, F_HIGH_ISCORE} & fe
+    if iscore_feats:
+        sc = pdf["iscore"].to_numpy(dtype=np.float64, na_value=0.0)
+        sc = np.nan_to_num(sc, nan=0.0)
+        if F_LOW_ISCORE in fe:
+            out[F_LOW_ISCORE] = ~(sc >= cfg.low_iscore)
+        if F_MED_ISCORE in fe:
+            out[F_MED_ISCORE] = sc >= cfg.med_iscore
+        if F_HIGH_ISCORE in fe:
+            out[F_HIGH_ISCORE] = sc >= cfg.high_iscore
     return out
 
 
@@ -469,6 +506,28 @@ def overlap_feature_columns(
     return out
 
 
+class BatchFeatures:
+    """A batch's base features, each computed at its own grain.
+
+    ``text`` columns (every text-only feature) and ``toks`` (their token
+    index) run once per distinct line text; ``codes[i]`` is line i's slot
+    among the distinct texts. ``line`` columns are the layout features
+    plus, when enabled, the word-overlap context features, per line."""
+
+    def __init__(self, pdf: pd.DataFrame, lex: Lexicons, cfg: PipelineConfig):
+        codes, uniques = pd.factorize(pdf["text"].fillna("").to_numpy(dtype=object))
+        texts: list[str] = uniques.tolist()
+        self.n = len(pdf)
+        self.codes = codes
+        self.toks = TokenIndex(tokenize_series(pd.Series(texts, dtype=object)))
+        self.text = text_feature_columns(texts, self.toks, lex, cfg)
+        self.line = layout_feature_columns(pdf, cfg)
+        if cfg.word_overlap and cfg.text_feats_enabled:
+            tokens = pd.Series(self.toks.tokens.to_numpy(dtype=object)[codes], dtype=object)
+            self.line.update(overlap_feature_columns(pdf, tokens, cfg))
+        self.words = cfg.text_feats_enabled and T_BASIC in cfg.enabled_text_feats
+
+
 def base_feature_matrix(
     pdf: pd.DataFrame,
     lex: Lexicons,
@@ -478,30 +537,42 @@ def base_feature_matrix(
     """(n × B) float64 indicator matrix over the model's base vocabulary.
 
     ``pdf`` must be in document order within each url (the caller slices
-    per-document ranges out of it).
+    per-document ranges out of it). The text-only columns are computed
+    once per distinct text and gathered per line as booleans; the layout
+    and context columns are set per line.
     """
-    n = len(pdf)
-    X = np.zeros((n, model.n_base), dtype=np.float64)
-    toks = TokenIndex(tokenize_series(pdf["text"].fillna("")))
-    cols = static_feature_columns(pdf, toks, lex, cfg)
-    if cfg.word_overlap and cfg.text_feats_enabled:
-        cols.update(overlap_feature_columns(pdf, toks.tokens, cfg))
-    idx = model.base_index
-    for name, arr in cols.items():
+    f = BatchFeatures(pdf, lex, cfg)
+    toks, idx, codes = f.toks, model.base_index, f.codes
+    X = np.zeros((f.n, model.n_base), dtype=np.float64)
+    for name, arr in f.text.items():
         j = idx.get(name)
         if j is not None:
-            X[:, j] = arr
-    if cfg.text_feats_enabled and T_BASIC in cfg.enabled_text_feats:
+            X[:, j] = arr[codes]
+    if f.words:
         # word_* scatter: one column lookup per distinct token, then one
-        # fancy-index store (duplicate cells are idempotent).
+        # fancy-index store of each line's hit tokens (duplicate cells are
+        # idempotent).
         widx = model.word_columns
         u = toks.uniques
         col = np.fromiter(
             (widx.get(w, -1) for w in u), dtype=np.int64, count=len(u)
         )[toks.codes]
-        hit = col >= 0
-        X[toks.rows[hit], col[hit]] = 1.0
+        rows, k = toks.take_lines(col >= 0, codes)
+        X[rows, col[k]] = 1.0
+    for name, arr in f.line.items():
+        j = idx.get(name)
+        if j is not None:
+            X[:, j] = arr
     return X
+
+
+def _fired(cols: dict[str, np.ndarray], n: int) -> list[list[str]]:
+    """Per row, the names of ``cols`` that are true there."""
+    names = list(cols)
+    if not names:
+        return [[] for _ in range(n)]
+    mat = np.column_stack([cols[c] for c in names])
+    return [[names[j] for j in np.flatnonzero(row)] for row in mat]
 
 
 def fired_name_lists(
@@ -510,23 +581,17 @@ def fired_name_lists(
     cfg: PipelineConfig,
 ) -> list[list[str]]:
     """Sorted fired base-feature names per line (checkpoint/parity path —
-    svmlight invariant: only-true, sorted)."""
-    n = len(pdf)
-    toks = TokenIndex(tokenize_series(pdf["text"].fillna("")))
-    cols = static_feature_columns(pdf, toks, lex, cfg)
-    if cfg.word_overlap and cfg.text_feats_enabled:
-        cols.update(overlap_feature_columns(pdf, toks.tokens, cfg))
-    names = list(cols.keys())
-    mat = np.column_stack([cols[c] for c in names]) if names else np.zeros((n, 0), bool)
-    tk_arr = toks.tokens.to_numpy(dtype=object)
-    use_words = cfg.text_feats_enabled and T_BASIC in cfg.enabled_text_feats
-    out: list[list[str]] = []
-    for i in range(n):
-        f = [names[j] for j in np.nonzero(mat[i])[0]]
-        if use_words:
-            f.extend("word_" + w for w in tk_arr[i] if w)
-        out.append(sorted(set(f)))
-    return out
+    svmlight invariant: only-true, sorted). Text names are listed once per
+    distinct text, like ``base_feature_matrix``'s columns."""
+    f = BatchFeatures(pdf, lex, cfg)
+    per_text = _fired(f.text, f.toks.n)
+    if f.words:
+        for names, tk in zip(per_text, f.toks.tokens):
+            names.extend("word_" + w for w in tk if w)
+    return [
+        sorted({*per_text[k], *names})
+        for k, names in zip(f.codes, _fired(f.line, f.n))
+    ]
 
 
 # ---------------------------------------------------------------------------

@@ -179,6 +179,65 @@ def split_mega_pages(
     )
 
 
+def chunk_frame_columns(r) -> tuple[dict[str, list], slice] | None:
+    """The scoring frame of one ``split_mega_pages`` chunk row ``r``, as
+    ``_plain_frame`` columns: the pre-halo, the re-segmented body and the
+    post-halo, with document-global line numbers and block ids. Returns
+    the columns and the body's row slice; None for a chunk with no lines."""
+    halo = list(r.halo_pre)
+    post = list(r.halo_post)
+    n_halo = len(halo)
+    n_post = len(post)
+    c = segment_text_columns(r.text)
+    n_body = len(c["line_no"])
+    if n_body == 0:
+        return None
+    n = n_halo + n_body + n_post
+    # document-global ids: halo carries its original identity;
+    # body blocks are chunk-contained so re-segmentation + the
+    # block offset reproduces the original block structure
+    def h(f, x):
+        return x[f] if isinstance(x, dict) else getattr(x, f)
+
+    line_no = (
+        [r.line_offset - n_halo + i + 1 for i in range(n_halo)]
+        + [x + r.line_offset for x in c["line_no"]]
+        + [r.line_offset + n_body + i + 1 for i in range(n_post)]
+    )
+    block_key = (
+        [f"1-{h('block_no', x) + 1}" for x in halo]
+        + [
+            f"1-{int(b.split('-', 1)[1]) + r.block_offset}"
+            for b in c["block_id"]
+        ]  # matches the fused path's single-page numbering
+        + [f"1-{h('block_no', x) + 1}" for x in post]
+    )
+    prev_ids = [None] + block_key[:-1]
+    next_ids = block_key[1:] + [None]
+    # frame-edge adjacency from the halo's true neighbors
+    if halo and h("prev_block_no", halo[0]) is not None:
+        prev_ids[0] = f"1-{h('prev_block_no', halo[0]) + 1}"
+    if post and h("next_block_no", post[-1]) is not None:
+        next_ids[-1] = f"1-{h('next_block_no', post[-1]) + 1}"
+
+    def framed(f, body):
+        return [h(f, x) for x in halo] + body + [h(f, x) for x in post]
+
+    cols = {
+        "url": [r.url] * n,
+        "line_no": line_no,
+        "page": [1] * n,
+        "block_id": block_key,
+        "llx": framed("block_llx", c["block_llx"]),
+        "line_llx": framed("line_llx", c["line_llx"]),
+        "text": framed("text", c["text"]),
+        "prev_block_id": prev_ids,
+        "next_block_id": next_ids,
+        "doc_llx_mode": [r.doc_llx_mode] * n,
+    }
+    return cols, slice(n_halo, n_halo + n_body)
+
+
 def chunking_refusal(ctx: DetectContext) -> str | None:
     """Why this model/config cannot be chunked (None = chunkable).
     Shared by detect_spans_chunked (raises) and detect_spans_auto
@@ -276,78 +335,18 @@ def detect_spans_chunked(
         for pdf in batches:
             out_frames = []
             for r in pdf.itertuples(index=False):
-                halo = list(r.halo_pre)
-                post = list(r.halo_post)
-                n_halo = len(halo)
-                n_post = len(post)
-                c = segment_text_columns(r.text)
-                n_body = len(c["line_no"])
-                if n_body == 0:
+                frame = chunk_frame_columns(r)
+                if frame is None:
                     continue
-                n = n_halo + n_body + n_post
-                # document-global ids: halo carries its original identity;
-                # body blocks are chunk-contained so re-segmentation + the
-                # block offset reproduces the original block structure
-                def h(f, x):
-                    return x[f] if isinstance(x, dict) else getattr(x, f)
-
-                line_no = (
-                    [r.line_offset - n_halo + i + 1 for i in range(n_halo)]
-                    + [x + r.line_offset for x in c["line_no"]]
-                    + [r.line_offset + n_body + i + 1 for i in range(n_post)]
-                )
-                block_key = (
-                    [f"1-{h('block_no', x) + 1}" for x in halo]
-                    + [
-                        f"1-{int(b.split('-', 1)[1]) + r.block_offset}"
-                        for b in c["block_id"]
-                    ]  # matches the fused path's single-page numbering
-                    + [f"1-{h('block_no', x) + 1}" for x in post]
-                )
-                llx = (
-                    [h("block_llx", x) for x in halo]
-                    + c["block_llx"]
-                    + [h("block_llx", x) for x in post]
-                )
-                line_llx = (
-                    [h("line_llx", x) for x in halo]
-                    + c["line_llx"]
-                    + [h("line_llx", x) for x in post]
-                )
-                texts = (
-                    [h("text", x) for x in halo]
-                    + c["text"]
-                    + [h("text", x) for x in post]
-                )
-                prev_ids = [None] + block_key[:-1]
-                next_ids = block_key[1:] + [None]
-                # frame-edge adjacency from the halo's true neighbors
-                if halo and h("prev_block_no", halo[0]) is not None:
-                    prev_ids[0] = f"1-{h('prev_block_no', halo[0]) + 1}"
-                if post and h("next_block_no", post[-1]) is not None:
-                    next_ids[-1] = f"1-{h('next_block_no', post[-1]) + 1}"
-                frame = _plain_frame(
-                    {
-                        "url": [r.url] * n,
-                        "line_no": line_no,
-                        "page": [1] * n,
-                        "block_id": block_key,
-                        "llx": llx,
-                        "line_llx": line_llx,
-                        "text": texts,
-                        "prev_block_id": prev_ids,
-                        "next_block_id": next_ids,
-                        "doc_llx_mode": [r.doc_llx_mode] * n,
-                    }
-                )
-                X = base_feature_matrix(frame, lex, cfg, model)
+                cols, body = frame
+                X = base_feature_matrix(_plain_frame(cols), lex, cfg, model)
                 labels, _ = score_matrix(X, model, cfg)
-                body = slice(n_halo, n_halo + n_body)
+                n_body = body.stop - body.start
                 rows = spans_from_labels(
                     [r.url] * n_body,
-                    line_no[body],
-                    block_key[body],
-                    texts[body],
+                    cols["line_no"][body],
+                    cols["block_id"][body],
+                    cols["text"][body],
                     labels[body],
                     [(r.url, 0, n_body)],
                     flush_cfg,

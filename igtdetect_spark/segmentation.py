@@ -48,15 +48,10 @@ _TAB_WIDTH = 4
 
 
 def _leading_ws(line: str) -> int:
-    n = 0
-    for ch in line:
-        if ch == " ":
-            n += 1
-        elif ch == "\t":
-            n += _TAB_WIDTH
-        else:
-            break
-    return n
+    """Indent width of ``line``: its leading spaces, a tab counting
+    ``_TAB_WIDTH``; no other whitespace counts."""
+    k = len(line) - len(line.lstrip(" \t"))
+    return k + (_TAB_WIDTH - 1) * line.count("\t", 0, k) if k else 0
 
 
 def segment_text(text: str) -> list[SegmentedLine]:

@@ -335,3 +335,202 @@ def test_auto_with_a_mega_document_takes_the_chunked_plan(
     assert sorted(map(key, auto.collect())) == sorted(
         map(key, detect_spans_fused(pages, ctx).collect())
     )
+
+
+# ---------------------------------------------------------------------------
+# Featurize once per distinct line text
+# ---------------------------------------------------------------------------
+
+FOX = "the quick brown fox"
+
+# The same texts at different indentation (is_indented), in blocks of
+# different sizes (prev/next_line_same_block) and after different
+# predecessors (the word-overlap features), within and across documents.
+REPEATS = [
+    ("http://rep/a",
+     f"Boilerplate line here\n{FOX}\n{FOX}\n\n    {FOX}\n    1sg ACC det\n\n"
+     f"footer text (c) 2019\n\n{FOX}\n\nfooter text (c) 2019"),
+    ("http://rep/b",
+     f"    {FOX}\n    footer text (c) 2019\n\n  Boilerplate line here\n"
+     f"  {FOX} jumps\n\n    1sg ACC det\n    {FOX}"),
+    ("http://rep/c", f"{FOX}\n\nBoilerplate line here\n\n{FOX}\n1sg ACC det"),
+]
+
+# Lines replaced after segmentation: missing, empty and whitespace-only
+# texts, next to each other and to real ones.
+HOLES = [None, float("nan"), "", "   ", "\t", None, ""]
+
+
+def _repeated_batch():
+    """(pages, columns, slices, oracle text per row): generator pages
+    (which repeat boilerplate) and ``REPEATS``, with ``HOLES`` written
+    over a spread of rows."""
+    pages = [(d.url, d.text) for d in (make_doc(i, seed=21) for i in range(12))]
+    pages = pages[:6] + REPEATS + pages[6:]
+    cols, slices = batch_to_columns(
+        [u for u, _ in pages], [None] * len(pages), [t for _, t in pages]
+    )
+    want_text = list(cols["text"])
+    rows = range(3, len(want_text), len(want_text) // (2 * len(HOLES)))
+    for k, hole in zip(rows, HOLES * 2):
+        cols["text"][k] = hole
+        want_text[k] = hole if isinstance(hole, str) else ""
+    return pages, cols, slices, want_text
+
+
+def _oracle_docs(pages, slices, want_text, lex, cfg):
+    """Per page: (row range, the oracle's LineInstances) over the same
+    texts as the batch."""
+    for (url, text), (_, a, b) in zip(pages, slices):
+        doc = doc_from_text(url, text)
+        for line, t in zip(doc.lines(), want_text[a:b]):
+            line.text = t
+        yield a, b, extract_doc_features(doc, lex, cfg)
+
+
+@pytest.mark.parametrize("overlap", [False, True], ids=["default", "word_overlap"])
+def test_repeated_lines_equal_oracle_rows(lex, overlap):
+    from igtdetect_spark.operators.vectorized import BatchFeatures
+
+    cfg = CFG.with_(word_overlap=overlap)
+    model = _train(lex, cfg)
+    pages, cols, slices, want_text = _repeated_batch()
+    frame = _plain_frame(cols)
+    f = BatchFeatures(frame, lex, cfg)
+    assert f.toks.n < len(frame)
+    X = base_feature_matrix(frame, lex, cfg, model)
+    for a, b, inst in _oracle_docs(pages, slices, want_text, lex, cfg):
+        np.testing.assert_array_equal(X[a:b], _base_matrix(inst, model))
+
+    # One text on several lines, in several documents: the per-line
+    # columns must tell those lines apart.
+    rows = [i for i, t in enumerate(want_text) if t.strip() == FOX]
+    assert len({cols["url"][i] for i in rows}) == len(REPEATS)
+    varying = ["is_indented", "prev_line_same_block", "next_line_same_block"]
+    if overlap:
+        varying += ["high_overlap", "no_overlap"]
+    for name in varying:
+        assert any(
+            len(set(f.line[name][f.codes == c])) == 2 for c in set(f.codes)
+        ), name
+
+
+def test_all_distinct_batch_equals_oracle_rows(lex, model):
+    from igtdetect_spark.operators.vectorized import BatchFeatures
+
+    pages, cols, slices, want_text = _repeated_batch()
+    for k, t in enumerate(want_text):
+        if t.strip():
+            cols["text"][k] = want_text[k] = f"{t} {k}"
+    # one hole of each kind is all a distinct batch may hold
+    cols["text"] = [
+        t if isinstance(t, str) and t.strip() else "" for t in cols["text"]
+    ]
+    want_text = [t if t.strip() else "" for t in want_text]
+    blank = [k for k, t in enumerate(cols["text"]) if not t]
+    for k in blank[1:]:
+        cols["text"][k] = want_text[k] = f"{k}"
+    cols["text"][blank[0]] = None
+    frame = _plain_frame(cols)
+    f = BatchFeatures(frame, lex, CFG)
+    np.testing.assert_array_equal(f.codes, np.arange(len(frame)))
+    X = base_feature_matrix(frame, lex, CFG, model)
+    for a, b, inst in _oracle_docs(pages, slices, want_text, lex, CFG):
+        np.testing.assert_array_equal(X[a:b], _base_matrix(inst, model))
+
+
+@pytest.mark.parametrize("overlap", [False, True], ids=["default", "word_overlap"])
+def test_fired_name_lists_equal_oracle_names(lex, overlap):
+    """The svmlight operator's fired names come from the same per-text
+    and per-line columns, and equal the oracle's current-line names."""
+    from igtdetect_spark.operators.vectorized import fired_name_lists
+    from igtdetect_spark.refmodel import split_prefix
+
+    cfg = CFG.with_(word_overlap=overlap)
+    pages, cols, slices, want_text = _repeated_batch()
+    got = fired_name_lists(_plain_frame(cols), lex, cfg)
+
+    def base(name):
+        ctx, b = split_prefix(name)
+        return ctx == "cur" and not b.startswith("prev_tag_")
+
+    for a, b, inst in _oracle_docs(pages, slices, want_text, lex, cfg):
+        want = [sorted(k for k, v in li.feats.items() if v and base(k))
+                for li in inst]
+        assert got[a:b] == want
+    flat = {n for names in got for n in names}
+    assert {"is_indented", "has_grams", "has_langname"} <= flat
+    assert any(n.startswith("word_") for n in flat)
+    assert ("high_overlap" in flat) == overlap
+
+
+def test_leading_ws_counts_only_spaces_and_tabs():
+    from igtdetect_spark.segmentation import _TAB_WIDTH, _leading_ws
+
+    def loop(line):  # the per-character definition
+        n = 0
+        for ch in line:
+            if ch == " ":
+                n += 1
+            elif ch == "\t":
+                n += _TAB_WIDTH
+            else:
+                break
+        return n
+
+    rng = random.Random(17)
+    alphabet = [" ", "\t", "　", "\xa0", "\x0b", "a"]
+    lines = ["", " ", "\t", "a", " \t a", "　 x"] + [
+        "".join(rng.choices(alphabet, k=rng.randrange(12)))
+        for _ in range(5000)
+    ]
+    assert [_leading_ws(t) for t in lines] == [loop(t) for t in lines]
+    assert _leading_ws(" \t\xa0 x") == 1 + _TAB_WIDTH
+
+
+def _inferred_frame(cols):
+    """``_plain_frame`` as pandas would infer it from the lists."""
+    import pandas as pd
+
+    from igtdetect_spark.segmentation import DEFAULT_FONT
+
+    pdf = pd.DataFrame(cols)
+    pdf["fonts"] = None
+    pdf["def_font_id"] = DEFAULT_FONT[0]
+    pdf["def_font_size"] = DEFAULT_FONT[1]
+    pdf["iscore"] = None
+    return pdf
+
+
+def test_plain_frame_equals_inferred_frame():
+    import pandas as pd
+
+    _, cols, _, _ = _repeated_batch()
+    got, want = _plain_frame(cols), _inferred_frame(cols)
+    assert got.dtypes.to_dict() == want.dtypes.to_dict()
+    assert got.dtypes["line_no"] == np.int64 and got.dtypes["llx"] == np.float64
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
+def test_plain_frame_equals_inferred_frame_for_chunk_frames(spark):
+    import pandas as pd
+
+    from igtdetect_spark.plans.chunked import (
+        chunk_frame_columns,
+        split_mega_pages,
+    )
+
+    docs = [make_doc(i, seed=5, n_paragraphs=12) for i in range(3)]
+    pages = spark.createDataFrame(
+        [(d.url, None, d.text) for d in docs], "url string, html binary, text string"
+    )
+    chunks = split_mega_pages(pages, chunk_lines=15).toPandas()
+    assert len(chunks) > len(docs)
+    framed = 0
+    for r in chunks.itertuples(index=False):
+        cols, body = chunk_frame_columns(r)
+        framed += body.start > 0
+        got, want = _plain_frame(cols), _inferred_frame(cols)
+        assert got.dtypes.to_dict() == want.dtypes.to_dict()
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+    assert framed  # some chunks carry a pre-halo
