@@ -17,7 +17,9 @@ lookup per *distinct* token, then numpy gathers and bincounts.
 
 The scoring kernel materializes the per-document boolean base-feature
 matrix and applies the context-decomposed weights (``refmodel``) as numpy
-matmuls — no per-line Python in the hot path.
+matmuls — no per-line Python in the hot path. ``label_lines`` is the
+labelling body every fused-style stage runs (``plans/pipeline.py``, the
+chunked score stage): featurize the batch once, score each document.
 """
 
 from __future__ import annotations
@@ -630,6 +632,26 @@ def score_matrix(
         prev = model.classes[k]
         labels.append(prev)
     return labels, probs
+
+
+def label_lines(
+    frame: pd.DataFrame,
+    slices: list[tuple[str, int, int]],
+    lex: Lexicons,
+    cfg: PipelineConfig,
+    model: ModelWeights,
+) -> list[str]:
+    """Labels for the rows the ``(url, start, stop)`` document ``slices``
+    cover, in order: the whole frame is featurized once, then each
+    document is scored on its own. Scoring stays per document — the
+    sequential prev_tag decode cannot cross documents, and one matmul
+    over the whole batch changes decision bits (BLAS blocking depends on
+    the row count)."""
+    X = base_feature_matrix(frame, lex, cfg, model)
+    labels: list[str] = []
+    for _, a, b in slices:
+        labels.extend(score_matrix(X[a:b], model, cfg)[0])
+    return labels
 
 
 def spans_from_labels(

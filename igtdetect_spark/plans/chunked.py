@@ -1,9 +1,9 @@
-"""Chunked mega-document detection: the scalable skew path.
+"""Chunked mega-document detection: the flagship's skew path.
 
-``detect_spans_salted`` (line-level chunk scoring + windowed assembly)
-pays two full-data shuffles and a doc-serial span-assembly task. This
-strategy keeps everything *narrow* except one balance repartition of text
-chunks:
+A mega-document on the fused path occupies one task for as long as it
+takes to score. This strategy splits it into chunks that score in
+parallel and keeps everything *narrow* except one balance repartition of
+text chunks:
 
 1. **split** (mapInPandas, narrow): segment each mega page once
    (columnar), cut at block boundaries near every ``chunk_lines`` mark
@@ -23,9 +23,9 @@ chunks:
    merge spans adjacent across chunk boundaries, renumber, re-apply the
    reference EOF quirk doc-globally.
 
-Batch-mode models only (sequential decode cannot cross chunks — refused,
-like the salted path); ``cfg.word_overlap`` is refused too (the 2-line
-halo cannot reproduce unbounded backward overlap context). Mega documents
+Batch-mode models only (sequential decode cannot cross chunks —
+refused); ``cfg.word_overlap`` is refused too (the 2-line halo cannot
+reproduce unbounded backward overlap context). Mega documents
 containing form-feed page breaks fall back to the fused whole-document
 path (the chunk frame hardcodes page=1; web text has no \\f, so the
 fallback is cold). Bit-parity with the fused path is tested with forced
@@ -52,11 +52,7 @@ from pyspark.sql.types import (
 
 from ..operators.schema import SPANS_SCHEMA
 from ..operators.segment import _plain_frame
-from ..operators.vectorized import (
-    base_feature_matrix,
-    score_matrix,
-    spans_from_labels,
-)
+from ..operators.vectorized import label_lines, spans_from_labels
 from ..refmodel import ModelWeights
 from ..segmentation import extract_page_text, segment_text_columns
 from .pipeline import DetectContext, detect_spans_fused
@@ -90,6 +86,9 @@ _CHUNK_SCHEMA = StructType(
 )
 
 _SPAN_COLS = [f.name for f in SPANS_SCHEMA.fields]
+
+# Hash buckets per core for the chunk shuffle (see detect_spans_chunked).
+CHUNK_WAVES = 4
 
 
 def split_mega_pages(
@@ -266,7 +265,6 @@ def detect_spans_chunked(
     ctx: DetectContext,
     chunk_lines: int = 20_000,
     mega_doc_chars: int = 1_000_000,
-    chunk_waves: int = 4,
 ) -> DataFrame:
     """Skew-safe pages → spans with chunk-parallel everything (see module
     docstring). Small docs keep the zero-shuffle fused path."""
@@ -316,8 +314,8 @@ def detect_spans_chunked(
         pages.filter(is_chunkable).coalesce(max(2, par)),
         chunk_lines,
         cfg.html_main_content,
-    ).repartition(chunk_waves * par, "url", "chunk_no")
-    # ^ hash balance with OVERDECOMPOSITION (default 4 waves/core): a mega doc
+    ).repartition(CHUNK_WAVES * par, "url", "chunk_no")
+    # ^ hash balance with OVERDECOMPOSITION (4 waves/core): a mega doc
     # yields few chunks relative to cores (e.g. 20 chunks at 8 cores),
     # and hash placement is balls-into-bins — at 2 bins/core the
     # expected max bin holds ~3 chunks (score stage runs at ~2/3
@@ -339,8 +337,10 @@ def detect_spans_chunked(
                 if frame is None:
                     continue
                 cols, body = frame
-                X = base_feature_matrix(_plain_frame(cols), lex, cfg, model)
-                labels, _ = score_matrix(X, model, cfg)
+                labels = label_lines(
+                    _plain_frame(cols), [(r.url, 0, len(cols["line_no"]))],
+                    lex, cfg, model,
+                )
                 n_body = body.stop - body.start
                 rows = spans_from_labels(
                     [r.url] * n_body,
@@ -460,7 +460,6 @@ def choose_detect_path(
     total_chars: int,
     cores: int,
     overhead_chars: int = AUTO_OVERHEAD_CHARS,
-    fairshare_factor: float = AUTO_FAIRSHARE_FACTOR,
 ) -> str:
     """'fused' or 'chunked' from corpus shape (pure function — unit
     tested). Chunk iff the biggest document exceeds a core's fair share
@@ -468,7 +467,7 @@ def choose_detect_path(
     if cores < 2:
         return "fused"
     fair = total_chars / cores
-    if max_chars > fairshare_factor * fair + overhead_chars:
+    if max_chars > AUTO_FAIRSHARE_FACTOR * fair + overhead_chars:
         return "chunked"
     return "fused"
 
@@ -605,7 +604,6 @@ def detect_spans_auto(
     pages: DataFrame,
     ctx: DetectContext,
     cores: int | None = None,
-    chunk_lines: int | None = None,
     overhead_chars: int = AUTO_OVERHEAD_CHARS,
     stats: "tuple[int, int] | None" = None,
 ) -> DataFrame:
@@ -624,10 +622,9 @@ def detect_spans_auto(
     ``corpus_char_stats`` pass feed ``choose_detect_path`` — a derived
     content column, a cached frame, a non-parquet or non-``file:``
     source, or a row group large enough to hold a mega document. When
-    chunking wins, ``chunk_lines`` defaults to spreading the biggest
-    document over ~2 chunks per core (floor 2,500 so per-chunk overhead
-    stays amortized), and only docs beyond twice their fair share are
-    chunked.
+    chunking wins, ``chunk_lines`` spreads the biggest document over ~2
+    chunks per core (floor 2,500 so per-chunk overhead stays
+    amortized), and only docs beyond twice their fair share are chunked.
 
     A straggler-first rearrangement (round-robin the big docs into the
     stage's first partitions so they start at t=0 — LPT via partition
@@ -645,7 +642,7 @@ def detect_spans_auto(
     if path == "chunked":
         mx, tot = st
         est_mx_lines = max(mx // 40, 1)  # ~40 chars/line of web text
-        chunk_lines = chunk_lines or max(2_500, est_mx_lines // (2 * cores))
+        chunk_lines = max(2_500, est_mx_lines // (2 * cores))
         mega_doc_chars = max(int(2 * tot / cores), 200_000)
         return detect_spans_chunked(
             pages, ctx, chunk_lines=chunk_lines,

@@ -1,7 +1,7 @@
 """End-to-end IGT detection pipelines (reference `test` lifecycle,
 SURVEY.md §3.1).
 
-Two physical strategies, identical results (parity-tested):
+Two physical strategies here, identical results (parity-tested):
 
 - **fused** (flagship): pages → spans in ONE narrow ``mapInPandas`` stage.
   Each input row is a whole document, so segmentation, features, scoring
@@ -10,34 +10,37 @@ Two physical strategies, identical results (parity-tested):
   → scan-shaped job: throughput = executors × per-core kernel speed, no
   skew interactions between documents (a mega-doc only occupies one task
   slot while it lasts; AQE-balanced input splits keep slots busy).
+  ``classify_lines_fused`` is the same stage emitting per-line
+  predictions instead of spans; both label each batch with
+  ``operators.vectorized.label_lines``.
 - **staged**: the relational composition (segment → window features →
   grouped scoring → span windows) for when the input is an already-
   sharded ``lines`` table — one shuffle on url.
+
+The skew path for mega-documents (``detect_spans_chunked``) and the
+fused-vs-chunked choice (``detect_spans_auto``) live in ``plans/chunked.py``.
 
 Model + lexicons travel as broadcast variables (~2 MB).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..featurespec import Lexicons
 from ..refmodel import ModelWeights
-from ..operators.schema import LINES_SCHEMA, SPANS_SCHEMA
+from ..operators.schema import SPANS_SCHEMA
 from ..operators.segment import _plain_frame, batch_to_columns, segment_pages
 from ..operators.score import score_lines
 from ..operators.spans import assign_spans_df, detected_span_text
-from ..operators.vectorized import (
-    base_feature_matrix,
-    score_matrix,
-    spans_from_labels,
-)
+from ..operators.vectorized import label_lines, spans_from_labels
 
 
 class DetectContext:
@@ -65,90 +68,68 @@ class DetectContext:
         )
 
 
-_LINE_COLS = [f.name for f in LINES_SCHEMA.fields]
 _SPAN_COLS = [f.name for f in SPANS_SCHEMA.fields]
+_PRED_SCHEMA = StructType([
+    StructField("url", StringType(), False),
+    StructField("line_no", IntegerType(), False),
+    StructField("page", IntegerType(), True),
+    StructField("block_id", StringType(), True),
+    StructField("text", StringType(), True),
+    StructField("pred", StringType(), True),
+])
+
+
+def _fused(
+    pages: DataFrame, ctx: DetectContext, schema: StructType, emit
+) -> DataFrame:
+    """pages → ``schema`` rows in one narrow ``mapInPandas`` stage: each
+    Arrow batch is segmented, labelled by ``label_lines``, and turned into
+    output rows by ``emit(cols, lines, slices, labels)``."""
+    cfg = ctx.cfg
+    model_bc, lex_bc = ctx.model_bc, ctx.lex_bc
+    names = schema.fieldNames()
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        model = ModelWeights.from_broadcastable(model_bc.value)
+        lex = lex_bc.value
+        for pdf in batches:
+            cols, slices = batch_to_columns(
+                pdf["url"], pdf["html"], pdf["text"], cfg.html_main_content
+            )
+            if not slices:
+                yield pd.DataFrame(columns=names)
+                continue
+            lines = _plain_frame(cols)
+            labels = label_lines(lines, slices, lex, cfg, model)
+            yield emit(cols, lines, slices, labels)
+
+    return pages.select("url", "html", "text").mapInPandas(gen, schema=schema)
 
 
 def detect_spans_fused(pages: DataFrame, ctx: DetectContext) -> DataFrame:
     """pages → spans, one narrow stage (no shuffle)."""
     cfg = ctx.cfg
-    model_bc, lex_bc = ctx.model_bc, ctx.lex_bc
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = ModelWeights.from_broadcastable(model_bc.value)
-        lex = lex_bc.value
-        for pdf in batches:
-            cols, slices = batch_to_columns(
-                pdf["url"], pdf["html"], pdf["text"], cfg.html_main_content
-            )
-            if not slices:
-                yield pd.DataFrame(columns=_SPAN_COLS)
-                continue
-            lines = _plain_frame(cols)
-            X = base_feature_matrix(lines, lex, cfg, model)
-            labels: list[str] = []
-            for url, a, b in slices:
-                lab, _ = score_matrix(X[a:b], model, cfg)
-                labels.extend(lab)
-            span_rows = spans_from_labels(
-                cols["url"],
-                cols["line_no"],
-                cols["block_id"],
-                cols["text"],
-                labels,
-                slices,
-                cfg,
-            )
-            yield pd.DataFrame(span_rows, columns=_SPAN_COLS)
+    def spans(cols, lines, slices, labels) -> pd.DataFrame:
+        rows = spans_from_labels(
+            cols["url"], cols["line_no"], cols["block_id"], cols["text"],
+            labels, slices, cfg,
+        )
+        return pd.DataFrame(rows, columns=_SPAN_COLS)
 
-    return pages.select("url", "html", "text").mapInPandas(
-        gen, schema=SPANS_SCHEMA
-    )
+    return _fused(pages, ctx, SPANS_SCHEMA, spans)
 
 
 def classify_lines_fused(pages: DataFrame, ctx: DetectContext) -> DataFrame:
     """pages → per-line predictions (url, line_no, page, block_id, text,
     pred) in one narrow stage — the flagship classified-lines sink."""
-    from pyspark.sql.types import (
-        IntegerType, StringType, StructField, StructType,
-    )
 
-    cfg = ctx.cfg
-    model_bc, lex_bc = ctx.model_bc, ctx.lex_bc
-    out_schema = StructType([
-        StructField("url", StringType(), False),
-        StructField("line_no", IntegerType(), False),
-        StructField("page", IntegerType(), True),
-        StructField("block_id", StringType(), True),
-        StructField("text", StringType(), True),
-        StructField("pred", StringType(), True),
-    ])
+    def preds(cols, lines, slices, labels) -> pd.DataFrame:
+        out = lines[["url", "line_no", "page", "block_id", "text"]].copy()
+        out["pred"] = labels
+        return out
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = ModelWeights.from_broadcastable(model_bc.value)
-        lex = lex_bc.value
-        for pdf in batches:
-            cols, slices = batch_to_columns(
-                pdf["url"], pdf["html"], pdf["text"], cfg.html_main_content
-            )
-            if not slices:
-                yield pd.DataFrame(
-                    columns=[f.name for f in out_schema.fields]
-                )
-                continue
-            lines = _plain_frame(cols)
-            X = base_feature_matrix(lines, lex, cfg, model)
-            labels: list[str] = []
-            for url, a, b in slices:
-                lab, _ = score_matrix(X[a:b], model, cfg)
-                labels.extend(lab)
-            out = lines[["url", "line_no", "page", "block_id", "text"]].copy()
-            out["pred"] = labels
-            yield out
-
-    return pages.select("url", "html", "text").mapInPandas(
-        gen, schema=out_schema
-    )
+    return _fused(pages, ctx, _PRED_SCHEMA, preds)
 
 
 def detect_spans_staged(pages: DataFrame, ctx: DetectContext) -> DataFrame:
@@ -160,40 +141,6 @@ def detect_spans_staged(pages: DataFrame, ctx: DetectContext) -> DataFrame:
     ).join(scored.select("url", "line_no", "pred"), ["url", "line_no"])
     with_ids = assign_spans_df(joined, tag_col="pred")
     return detected_span_text(with_ids, ctx.cfg)
-
-
-def detect_spans_salted(
-    pages: DataFrame,
-    ctx: DetectContext,
-    chunk_lines: int = 20_000,
-    mega_doc_chars: int = 1_000_000,
-) -> DataFrame:
-    """Skew-safe pages → spans: documents under ``mega_doc_chars`` take the
-    zero-shuffle fused path; mega-documents are segmented, salt-chunked
-    with halo for scoring, and span-assembled with window operators —
-    results identical to the fused path (parity-tested), wall-clock no
-    longer bounded by the largest document.
-
-    The split predicate is a native ``length(text)`` filter — both sides
-    prune at the scan."""
-    from ..operators.score import score_lines_salted
-
-    is_mega = (F.length(F.coalesce(F.col("text"), F.lit(""))) >= mega_doc_chars) | (
-        F.length(F.coalesce(F.col("html"), F.lit(b""))) >= mega_doc_chars
-    )
-    small = pages.filter(~is_mega)
-    mega = pages.filter(is_mega)
-
-    small_spans = detect_spans_fused(small, ctx)
-
-    from ..operators.spans import detected_span_text_grouped
-
-    lines = segment_pages(mega, ctx.cfg.html_main_content)
-    scored = score_lines_salted(
-        lines, ctx.model_bc, ctx.lex_bc, ctx.cfg, chunk_lines=chunk_lines
-    )
-    mega_spans = detected_span_text_grouped(scored, ctx.cfg)
-    return small_spans.unionByName(mega_spans)
 
 
 def detect_with_metrics(pages: DataFrame, ctx: DetectContext):

@@ -1,5 +1,6 @@
-"""Exactness of the batch token index and the gram fast path, and the
-job-free fused decision of ``detect_spans_auto``.
+"""Exactness of the batch token index and the gram fast path, the
+job-free fused decision of ``detect_spans_auto``, chunked-vs-fused parity,
+and the fused stages' per-document sequential decode.
 
 Everything is built from the synthetic generator's word pools and a model
 trained on its corpus, so no reference data directory is needed.
@@ -331,10 +332,112 @@ def test_auto_with_a_mega_document_takes_the_chunked_plan(
     auto = detect_spans_auto(pages, ctx, cores=4, overhead_chars=1_000)
     plan = auto._jdf.queryExecution().logical().toString()
     assert plan.count("MapInPandas") > 1
+    assert _span_rows(auto) == _span_rows(detect_spans_fused(pages, ctx))
+
+
+def _span_rows(spans) -> list[tuple]:
+    """A spans frame's rows, hashable and sorted."""
     key = lambda r: tuple(tuple(v) if isinstance(v, list) else v for v in r)
-    assert sorted(map(key, auto.collect())) == sorted(
-        map(key, detect_spans_fused(pages, ctx).collect())
+    return sorted(map(key, spans.collect()))
+
+
+def test_chunked_with_many_chunks_equals_fused(spark, ctx):
+    """Small chunks give every document pre- and post-halos and
+    chunk-local spans to stitch; the spans must equal the fused path's."""
+    from igtdetect_spark.plans.chunked import detect_spans_chunked
+    from igtdetect_spark.plans.pipeline import detect_spans_fused
+
+    docs = [make_doc(i, seed=5, n_paragraphs=12) for i in range(8)]
+    pages = spark.createDataFrame(
+        [(d.url, None, d.text) for d in docs], "url string, html binary, text string"
     )
+    chunked = detect_spans_chunked(pages, ctx, chunk_lines=2, mega_doc_chars=1)
+    want = _span_rows(detect_spans_fused(pages, ctx))
+    assert len(want) > len(docs)
+    assert _span_rows(chunked) == want
+
+
+# ---------------------------------------------------------------------------
+# Sequential (prev_tag) models
+# ---------------------------------------------------------------------------
+
+SEQ_CFG = DEFAULT_CONFIG.with_(real_oov_features=True)
+
+
+@pytest.fixture(scope="module")
+def seq_model(lex):
+    """Trained with the prev_tag feature: scoring takes the sequential
+    greedy decode."""
+    m = _train(lex, SEQ_CFG)
+    assert SEQ_CFG.prev_tag and m.has_prev_tag
+    return m
+
+
+@pytest.fixture(scope="module")
+def seq_ctx(spark, lex, seq_model):
+    from igtdetect_spark.plans.pipeline import DetectContext
+
+    return DetectContext(spark, seq_model, lex, SEQ_CFG)
+
+
+def test_sequential_model_is_refused_by_chunked_and_fused_by_auto(
+    spark, seq_ctx, pages_dir
+):
+    from igtdetect_spark.plans.chunked import detect_spans_chunked
+
+    pages = spark.read.parquet(str(pages_dir))
+    with pytest.raises(ValueError, match="sequential"):
+        detect_spans_chunked(pages, seq_ctx)
+    # a derived column defeats the footer bound, so only the refusal
+    # keeps the decision from running the stats pass
+    derived = pages.selectExpr("url", "html", "upper(text) AS text")
+    path, reason, jobs = _decide(spark, derived, seq_ctx, "fp:sequential")
+    assert path == "fused" and reason.startswith("refused: ")
+    assert "sequential" in reason
+    assert jobs == 0
+
+
+def test_fused_sequential_decode_equals_oracle_per_document(
+    spark, lex, seq_model, seq_ctx, pages_dir
+):
+    """Each Arrow batch holds several documents; the decode must start
+    afresh at every document, as the oracle's does."""
+    from igtdetect_spark.oracle.pipeline import (
+        detect_spans,
+        detected_text,
+        score_doc,
+    )
+    from igtdetect_spark.plans.pipeline import (
+        classify_lines_fused,
+        detect_spans_fused,
+        detected_text_df,
+    )
+    from igtdetect_spark.segmentation import extract_page_text
+
+    want_lines, want_text = {}, {}
+    docs = [make_doc(i, seed=5, as_html=i % 5 == 1) for i in range(40)]
+    for r in C.corpus_rows(docs):
+        doc = doc_from_text(r["url"], extract_page_text(r["html"], r["text"]))
+        inst = extract_doc_features(doc, lex, SEQ_CFG)
+        labels, _ = score_doc(inst, seq_model, SEQ_CFG)
+        want_lines[r["url"]] = labels
+        text = detected_text(detect_spans(doc, labels, SEQ_CFG))
+        if text:
+            want_text[r["url"]] = text
+    assert len(want_text) > len(docs) // 2
+
+    pages = spark.read.parquet(str(pages_dir))
+    got_lines = {}
+    for r in classify_lines_fused(pages, seq_ctx).collect():
+        got_lines.setdefault(r["url"], []).append((r["line_no"], r["pred"]))
+    assert {u: [p for _, p in sorted(v)] for u, v in got_lines.items()} == (
+        want_lines
+    )
+    got_text = {
+        r["url"]: r["detected_text"]
+        for r in detected_text_df(detect_spans_fused(pages, seq_ctx)).collect()
+    }
+    assert got_text == want_text
 
 
 # ---------------------------------------------------------------------------

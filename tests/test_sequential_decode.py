@@ -1,6 +1,7 @@
-"""Sequential greedy decode (prev_tag models): oracle vs Spark parity,
-salted-path refusal, and the prediction-feedback semantics (reference
-cw.test with prev_label_func, igtdetect.py:1140-1146)."""
+"""Sequential greedy decode (prev_tag models): oracle vs Spark parity and
+the prediction-feedback semantics (reference cw.test with
+prev_label_func, igtdetect.py:1140-1146). The chunked path's refusal of
+such models is tested in test_detect_fastpaths.py."""
 
 import numpy as np
 import pytest
@@ -91,18 +92,6 @@ def test_spark_matches_oracle_sequential(spark, seq_model):
     }
     assert got_f == want_text
     assert got_s == want_text
-
-
-def test_salted_refuses_sequential_model(spark, seq_model):
-    from igtdetect_spark.operators.score import score_lines_salted
-    from igtdetect_spark.operators.segment import segment_pages
-    from igtdetect_spark.plans.pipeline import DetectContext
-    from igtdetect_spark.sources.pages import synthetic_pages
-
-    ctx = DetectContext(spark, seq_model, get_lexicons())
-    lines = segment_pages(synthetic_pages(spark, 3))
-    with pytest.raises(ValueError, match="sequential"):
-        score_lines_salted(lines, ctx.model_bc, ctx.lex_bc, ctx.cfg)
 
 
 def test_flagship_model_is_batch_mode():

@@ -206,27 +206,6 @@ class TestSyntheticParity:
             pages, ctx_wo, overhead_chars=1_000
         ).count() == len(f)
 
-    def test_salted_matches_fused(self, spark, ctx_synth):
-        """Skew path: chunked halo scoring must be bit-identical to the
-        whole-document path — small chunk size forces multi-chunk docs."""
-        from igtdetect_spark.plans.pipeline import (
-            detect_spans_fused,
-            detect_spans_salted,
-        )
-        from igtdetect_spark.sources.pages import synthetic_pages
-
-        pages = synthetic_pages(
-            spark, 12, mega_doc_every=5, mega_doc_lines=3000
-        ).cache()
-        ft = _collect_detected(detect_spans_fused(pages, ctx_synth))
-        st = _collect_detected(
-            detect_spans_salted(
-                pages, ctx_synth, chunk_lines=500, mega_doc_chars=50_000
-            )
-        )
-        assert ft == st
-        assert len(ft) >= 8
-
     def test_span_schema_and_ordering(self, spark, ctx_synth, pages):
         from igtdetect_spark.plans.pipeline import detect_spans_fused
 
